@@ -14,51 +14,21 @@ import graft.query.{QuerySpec, Searcher}
   */
 object EntryIndex {
 
+  private val Root = "/tmp/graft_entry_index"
+
   /** Cache key = path + a CONTENT fingerprint (name/length/mtime of
     * every file under documents.parquet) — a changed table must never
     * silently reuse a stale index.
     */
   private def indexDirFor(spark: SparkSession, dir: String): String =
     // v10: key via the shared IndexPaths.contentTag helper
-    s"/tmp/graft_entry_index/v10_" +
-      IndexPaths.contentTag(spark, s"$dir/documents.parquet")
-
-  /** Cache dirs older than this (by last-use, see the sweep) are
-    * reclaimed — covers BOTH retired key versions and stale same-
-    * version tags from regenerated source tables, which the old
-    * prefix-based sweep left forever. Age-based (not immediate) so a
-    * concurrent process still running an older binary never loses its
-    * live index mid-query.
-    */
-  private val SweepTtlMs = 6L * 3600 * 1000
-
-  /** TTL sweep of every sibling cache dir except the current one:
-    * stats.json mtime = last use (ensure refreshes it on a cache hit),
-    * falling back to the dir mtime for half-built trees.
-    */
-  private def sweepStale(spark: SparkSession, keep: String): Unit = {
-    val parent = new org.apache.hadoop.fs.Path("/tmp/graft_entry_index")
-    val pfs = IndexPaths.fs(spark, parent.toString)
-    if (!pfs.exists(parent)) return
-    val now = System.currentTimeMillis()
-    pfs.listStatus(parent)
-      .filterNot(_.getPath.getName ==
-        new org.apache.hadoop.fs.Path(keep).getName)
-      .foreach { s =>
-        val marker = new org.apache.hadoop.fs.Path(
-          s"${s.getPath}/stats.json")
-        val age = now - (if (pfs.exists(marker))
-          pfs.getFileStatus(marker).getModificationTime
-        else s.getModificationTime)
-        if (age > SweepTtlMs) pfs.delete(s.getPath, true)
-      }
-  }
+    s"$Root/v10_" + IndexPaths.contentTag(spark, s"$dir/documents.parquet")
 
   /** Process-level memo of index dirs already verified committed by
     * THIS process: every engine query calls ensure, and re-paying the
     * sweep + checkpoint listing + marker refresh per query is pure
     * fixed overhead (~10-30 FS ops). The key embeds the source
-    * content tag, so a changed table misses the memo; the 6 h sibling
+    * content tag, so a changed table misses the memo; the sibling
     * TTL dwarfs any single process's lifetime, so skipping the
     * per-call last-use refresh is safe.
     */
@@ -68,15 +38,13 @@ object EntryIndex {
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val idx = indexDirFor(spark, dir)
     if (ensuredMemo.contains(idx)) return idx
-    sweepStale(spark, keep = idx)
-    // cache hit: refresh last-use so another process's sweep never
+    // siblings unused past the TTL go: retired key versions and stale
+    // tags of regenerated source tables. stats.json mtime = last use,
+    // refreshed on every cache hit so another process's sweep never
     // reclaims an index this one keeps serving
-    val statsP = new org.apache.hadoop.fs.Path(s"$idx/stats.json")
-    val ifs = IndexPaths.fs(spark, idx)
-    try if (ifs.exists(statsP))
-      ifs.setTimes(statsP, System.currentTimeMillis(), -1)
-    catch { case _: java.io.IOException => () }
-    if (!IndexPaths.exists(spark, s"$idx/stats.json") ||
+    Commit.sweep(spark, Root, "stats.json",
+      keep = Set(new org.apache.hadoop.fs.Path(idx).getName))
+    if (!Commit.touch(spark, s"$idx/stats.json") ||
         new index.CheckpointStore(spark, idx).list()
           .count(_.stage == "segments") < 2) {
       import spark.implicits._
@@ -145,8 +113,8 @@ object EntryIndex {
       if (memoHit != null) return memoHit
       val mid = spark.read.parquet(src)
         .agg(max($"doc_id")).head().getLong(0) / 2
-      val base = s"/tmp/graft_entry_index/v10_b${mid}_$tag"
-      val delta = s"/tmp/graft_entry_index/v10_d${mid}_$tag"
+      val base = s"$Root/v10_b${mid}_$tag"
+      val delta = s"$Root/v10_d${mid}_$tag"
       val cfg = IndexBuilder.Config(numBuckets = 8, blockSize = 64,
         numGroups = 2, saltTarget = 300L, withPositions = true)
       def docsFor(pred: org.apache.spark.sql.Column) =
@@ -155,17 +123,11 @@ object EntryIndex {
             concat(lit("doc://"), $"doc_id").as("url"), $"text")
           .as[Doc]
       def ensureGen(idx: String, pred: org.apache.spark.sql.Column,
-                    id: String): Unit = {
-        val statsP = new org.apache.hadoop.fs.Path(s"$idx/stats.json")
-        val f = IndexPaths.fs(spark, idx)
-        if (f.exists(statsP)) {
-          // refresh last-use so the sibling TTL sweep keeps it alive
-          try f.setTimes(statsP, System.currentTimeMillis(), -1)
-          catch { case _: java.io.IOException => () }
-        } else IndexBuilder.build(docsFor(pred), idx, cfg,
-          buildId = s"entry-$id", resume = true,
-          lineage = s"$id$mid:$src")
-      }
+                    id: String): Unit =
+        if (!Commit.touch(spark, s"$idx/stats.json"))
+          IndexBuilder.build(docsFor(pred), idx, cfg,
+            buildId = s"entry-$id", resume = true,
+            lineage = s"$id$mid:$src")
       ensureGen(base, col("doc_id") <= mid, "b")
       ensureGen(delta, col("doc_id") > mid, "d")
       val gens = Seq(base, delta)
@@ -192,30 +154,28 @@ object EntryIndex {
       val tag = IndexPaths.contentTag(spark, src)
       val memoHit = streamMemo.get(tag)
       if (memoHit != null) return memoHit
-      val root = s"/tmp/graft_entry_index/v10_st_$tag"
-      val marker = new org.apache.hadoop.fs.Path(s"$root/stats.json")
-      val f = IndexPaths.fs(spark, root)
-      if (f.exists(marker)) {
-        // refresh last-use so the sibling TTL sweep keeps it alive
-        try f.setTimes(marker, System.currentTimeMillis(), -1)
-        catch { case _: java.io.IOException => () }
+      val root = s"$Root/v10_st_$tag"
+      val marker = s"$root/stats.json"
+      if (Commit.touch(spark, marker)) {
         val cached = Streaming.listGenerations(spark, root)
         streamMemo.put(tag, cached)
         return cached
       }
-      IndexPaths.delete(spark, root)
-      val staged = s"$root/_staged_docs"
-      spark.read.parquet(src)
-        .select($"doc_id".as("docId"),
-          concat(lit("doc://"), $"doc_id").as("url"), $"text")
-        .repartitionByRange(3, col("docId"))
-        .write.mode("overwrite").parquet(staged)
-      val cfg = IndexBuilder.Config(numBuckets = 8, blockSize = 64,
-        numGroups = 2, saltTarget = 300L, withPositions = true)
-      val gens = Streaming.continuousIndexDocs(spark, staged, root, cfg)
-      IndexPaths.writeString(spark, s"$root/stats.json",
+      val gens = Commit.marked(spark, marker) {
+        IndexPaths.delete(spark, root)
+        val staged = s"$root/_staged_docs"
+        spark.read.parquet(src)
+          .select($"doc_id".as("docId"),
+            concat(lit("doc://"), $"doc_id").as("url"), $"text")
+          .repartitionByRange(3, col("docId"))
+          .write.mode("overwrite").parquet(staged)
+        val cfg = IndexBuilder.Config(numBuckets = 8, blockSize = 64,
+          numGroups = 2, saltTarget = 300L, withPositions = true)
+        Streaming.continuousIndexDocs(spark, staged, root, cfg)
+      } { gens =>
         s"""{"kind":"stream_root","generations":${gens.size},""" +
-          s""""lineage":"$tag"}""")
+          s""""lineage":"$tag"}"""
+      }
       streamMemo.put(tag, gens)
       gens
     }
@@ -326,10 +286,13 @@ object EntryIndex {
     // pid-keying dedupes only intra-process repeats: every verify/
     // bench run is a NEW JVM, so dead processes' dirs for this same
     // (table, query) would still accumulate one full text export per
-    // run — sweep siblings whose pid is no longer alive (live pids
-    // are left alone; that concurrent-writer race is what the
-    // pid-keying exists to avoid)
-    sweepDeadSiblings(spark, parent, pid)
+    // run — sweep (TTL 0) every sibling whose pid is no longer alive
+    // (live pids are left alone; that concurrent-writer race is what
+    // the pid-keying exists to avoid). Pid-less legacy layouts belong
+    // to no current process and go unconditionally.
+    Commit.sweep(spark, parent, "manifest.json", ttlMs = 0L,
+      pidOf = "^v1_(\\d+)_".r.findFirstMatchIn(_)
+        .flatMap(_.group(1).toLongOption))
     IndexPaths.delete(spark, out)
     val chunks = 4
     Export.dumpQuery(spark, Seq(idx), query, src, out,
@@ -359,33 +322,6 @@ object EntryIndex {
     back
       .select(col("doc_id"), col("url"), md5(col("text")).as("fp"))
       .orderBy("doc_id")
-  }
-
-  /** Delete export dirs left by processes that no longer exist —
-    * bounds /tmp growth at one copy per LIVE process instead of one
-    * per historical run, without racing live writers (a live pid's
-    * dirs are never touched, whatever their query hash). Dirs in
-    * legacy layouts (nanoTime-named, pid-less) belong to no current
-    * process and are swept unconditionally.
-    */
-  private def sweepDeadSiblings(spark: SparkSession, parent: String,
-                                selfPid: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(parent)
-    val f = IndexPaths.fs(spark, parent)
-    if (!f.exists(p)) return
-    f.listStatus(p).foreach { s =>
-      val name = s.getPath.getName
-      val dead = name.split("_").toSeq match {
-        case Seq("v1", pidStr, _) =>
-          pidStr.toLongOption match {
-            case Some(pid) if pid == selfPid => false
-            case Some(pid) => !ProcessHandle.of(pid).isPresent
-            case None => true // unparseable: legacy
-          }
-        case _ => true // nanoTime or pid-less legacy layout
-      }
-      if (dead) f.delete(s.getPath, true)
-    }
   }
 
   /** Engine-paged phrase serve: rows [offset, offset+limit) of the

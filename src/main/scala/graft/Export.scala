@@ -56,32 +56,33 @@ object Export {
     val ckpt = new CheckpointStore(spark, outDir)
     val lineage = s"export;chunks=$nChunks;f=$format;q=${tag(query)};" +
       s"idx=${indexTag(spark, indexDirs)};src=${srcTag(spark, srcDocs)}"
-    prepareOutDir(spark, outDir, ckpt, lineage, resume)
-    val t0 = System.currentTimeMillis()
-    // input-sized shuffle width for the hit-set joins (the chunk
-    // writes themselves are filters over the cache — no shuffle);
-    // everything materializes inside writeChunks, so the scope closes
-    graft.Adaptive.withShuffleWidth(spark,
-      graft.Adaptive.widthFor(srcDocs)) {
-    val ids = Searcher.conjunctiveDocs(spark, indexDirs, query)
-      .toDF("docId")
-    val meta = indexDirs.map(d => spark.read.parquet(s"$d/docs")
-        .select(col("docId"), col("url")))
-      .reduce(_ unionByName _)
-    val rows = ids.join(meta, "docId")
-      .join(srcDocs.select(col("url"), col("text")), "url")
-      .select(col("docId").as("doc_id"), col("url"), col("text"))
-      .withColumn("chunk", pmod(xxhash64(col("doc_id")), lit(nChunks)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (total, skipped) = writeChunks(spark, rows, outDir, nChunks,
-        resume, ckpt, "export", lineage, t0, format)
-      IndexPaths.writeString(spark, s"$outDir/manifest.json",
-        s"""{"rows":$total,"chunks":$nChunks,"format":"$format",""" +
-          s""""query":${jsonStr(query)}}""")
-      ExportResult(total, nChunks, skipped)
-    } finally rows.unpersist()
+    val (total, skipped) = Commit.marked(spark, s"$outDir/manifest.json") {
+      prepareOutDir(spark, outDir, ckpt, lineage, resume)
+      val t0 = System.currentTimeMillis()
+      // input-sized shuffle width for the hit-set joins (the chunk
+      // writes themselves are filters over the cache — no shuffle);
+      // everything materializes inside writeChunks, so the scope closes
+      graft.Adaptive.withShuffleWidth(spark,
+        graft.Adaptive.widthFor(srcDocs)) {
+        val ids = Searcher.conjunctiveDocs(spark, indexDirs, query)
+          .toDF("docId")
+        val meta = indexDirs.map(d => spark.read.parquet(s"$d/docs")
+            .select(col("docId"), col("url")))
+          .reduce(_ unionByName _)
+        val rows = ids.join(meta, "docId")
+          .join(srcDocs.select(col("url"), col("text")), "url")
+          .select(col("docId").as("doc_id"), col("url"), col("text"))
+          .withColumn("chunk", pmod(xxhash64(col("doc_id")), lit(nChunks)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try writeChunks(spark, rows, outDir, nChunks, resume, ckpt,
+          "export", lineage, t0, format)
+        finally rows.unpersist()
+      }
+    } { case (total, _) =>
+      s"""{"rows":$total,"chunks":$nChunks,"format":"$format",""" +
+        s""""query":${jsonStr(query)}}"""
     }
+    ExportResult(total, nChunks, skipped)
   }
 
   /** Export a filtered corpus slice (no index involved): predicate
@@ -100,22 +101,23 @@ object Export {
     // srcTag fences against the corpus itself changing underneath
     val lineage = s"export_f;chunks=$nChunks;f=$format;" +
       s"p=${tag(predicate.toString)};src=${srcTag(spark, srcDocs)}"
-    prepareOutDir(spark, outDir, ckpt, lineage, resume)
-    val t0 = System.currentTimeMillis()
-    graft.Adaptive.withShuffleWidth(spark,
-      graft.Adaptive.widthFor(srcDocs)) {
-    val rows = srcDocs.filter(predicate)
-      .withColumn("chunk",
-        pmod(xxhash64(col("url")), lit(nChunks)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (total, skipped) = writeChunks(spark, rows, outDir, nChunks,
-        resume, ckpt, "export_f", lineage, t0, format)
-      IndexPaths.writeString(spark, s"$outDir/manifest.json",
-        s"""{"rows":$total,"chunks":$nChunks,"format":"$format"}""")
-      ExportResult(total, nChunks, skipped)
-    } finally rows.unpersist()
+    val (total, skipped) = Commit.marked(spark, s"$outDir/manifest.json") {
+      prepareOutDir(spark, outDir, ckpt, lineage, resume)
+      val t0 = System.currentTimeMillis()
+      graft.Adaptive.withShuffleWidth(spark,
+        graft.Adaptive.widthFor(srcDocs)) {
+        val rows = srcDocs.filter(predicate)
+          .withColumn("chunk",
+            pmod(xxhash64(col("url")), lit(nChunks)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try writeChunks(spark, rows, outDir, nChunks, resume, ckpt,
+          "export_f", lineage, t0, format)
+        finally rows.unpersist()
+      }
+    } { case (total, _) =>
+      s"""{"rows":$total,"chunks":$nChunks,"format":"$format"}"""
     }
+    ExportResult(total, nChunks, skipped)
   }
 
   /** The shared chunk ladder: write-or-skip each chunk, commit after
@@ -150,96 +152,106 @@ object Export {
       }
     }
     if (pending.nonEmpty) {
+      // Every chunk job carries this export's tag. The first failure
+      // cancels the running siblings and stops queued ones from
+      // starting; all chunk threads end before this returns or
+      // rethrows, so no export job outlives the call (or writes after
+      // `rows` is unpersisted).
+      val sc = spark.sparkContext
+      val jobTag = s"graft-export-${java.util.UUID.randomUUID()}"
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
       // 2-4 jobs in flight is plenty (guide §2.6) — enough to fill
       // stage tails, not so many that they fight for task slots
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(4, pending.size))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
       try {
         val futs = pending.toSeq.map { c =>
-          scala.concurrent.Future {
-            // row count observed during the write — no re-read job
-            val obs = new org.apache.spark.sql.Observation()
-            val w = rows.filter(col("chunk") === c).drop("chunk")
-              .observe(obs, count(lit(1)).as("n"))
-              .write.mode(SaveMode.Overwrite)
-            val path = s"$outDir/chunk=$c"
-            format match {
-              case "parquet" => w.parquet(path)
-              case "jsonl" => w.json(path)
-              case "csv" =>
-                // RFC4180 quoting (escape = double-quote, not
-                // backslash) and a quoted empty marker: web text
-                // contains newlines, quotes and empty strings, and the
-                // default writer options silently corrupt all three on
-                // read-back (consumers must read with multiLine=true,
-                // escape='"')
-                w.option("header", "true").option("escape", "\"")
-                  .option("emptyValue", "\"\"").csv(path)
-            }
-            val n = obs.get("n").asInstanceOf[Long]
-            ckpt.commit(Checkpoint("export", stage, c, "COMPLETE", n,
-              IndexPaths.dirBytes(spark, path),
-              lineage, t0, System.currentTimeMillis()))
-            n
-          }
+          pool.submit(new java.util.concurrent.Callable[Long] {
+            def call(): Long =
+              if (failure.get != null) 0L
+              else try {
+                sc.addJobTag(jobTag)
+                writeChunk(spark, rows, outDir, c, ckpt, stage, lineage,
+                  t0, format)
+              } catch {
+                case e: Throwable =>
+                  if (failure.compareAndSet(null, e))
+                    sc.cancelJobsWithTag(jobTag)
+                  throw e
+              }
+          })
         }
-        total += scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf).sum
+        val counts = futs.map { f =>
+          try f.get()
+          catch { case _: java.util.concurrent.ExecutionException => 0L }
+        }
+        Option(failure.get).foreach(e => throw e)
+        total += counts.sum
       } finally pool.shutdown()
     }
     (total, skipped)
   }
 
+  /** Write chunk `c` and commit its checkpoint once the write is
+    * durable; returns the row count (observed during the write — no
+    * re-read job).
+    */
+  private def writeChunk(spark: SparkSession, rows: DataFrame,
+                         outDir: String, c: Int, ckpt: CheckpointStore,
+                         stage: String, lineage: String, t0: Long,
+                         format: String): Long = {
+    val obs = new org.apache.spark.sql.Observation()
+    val w = rows.filter(col("chunk") === c).drop("chunk")
+      .observe(obs, count(lit(1)).as("n"))
+      .write.mode(SaveMode.Overwrite)
+    val path = s"$outDir/chunk=$c"
+    format match {
+      case "parquet" => w.parquet(path)
+      case "jsonl" => w.json(path)
+      case "csv" =>
+        // RFC4180 quoting (escape = double-quote, not backslash) and a
+        // quoted empty marker: web text contains newlines, quotes and
+        // empty strings, and the default writer options silently
+        // corrupt all three on read-back (consumers must read with
+        // multiLine=true, escape='"')
+        w.option("header", "true").option("escape", "\"")
+          .option("emptyValue", "\"\"").csv(path)
+    }
+    val n = obs.get("n").asInstanceOf[Long]
+    ckpt.commit(Checkpoint("export", stage, c, "COMPLETE", n,
+      IndexPaths.dirBytes(spark, path), lineage, t0,
+      System.currentTimeMillis()))
+    n
+  }
+
   /** Expiry sweep over a directory of export outputs (the reference's
-    * export `expires_at` + cleanup, models/job.py): delete every
-    * child export whose NEWEST activity — manifest, checkpoint
-    * commits, or chunk dirs — is older than `ttlMs`, so completed
-    * exports expire by their completion time and abandoned partials
-    * expire too instead of leaking forever. An IN-FLIGHT export keeps
-    * touching its chunk dirs, so it survives any ttl longer than its
+    * export `expires_at` + cleanup, models/job.py): delete every child
+    * export whose manifest — or, for an abandoned partial without one,
+    * the export dir itself — is older than `ttlMs` ([[Commit.sweep]]).
+    * An IN-FLIGHT export re-creates a chunk dir per chunk, which
+    * refreshes its dir's mtime, so it survives any ttl longer than its
     * slowest single chunk — choose ttl accordingly (hours, not
-    * seconds); there is no pid in the layout to check liveness
-    * against. Returns the deleted paths.
+    * seconds). Returns the deleted paths.
     */
   def sweepExpired(spark: SparkSession, parentDir: String, ttlMs: Long,
-                   nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    val f = IndexPaths.fs(spark, parentDir)
-    val p = new org.apache.hadoop.fs.Path(parentDir)
-    if (!f.exists(p)) return Seq.empty
-    f.listStatus(p).toSeq.filter(_.isDirectory).flatMap { d =>
-      val ckptDir = new org.apache.hadoop.fs.Path(
-        s"${d.getPath}/_checkpoints")
-      val activity = (f.listStatus(d.getPath).toSeq ++
-        (if (f.exists(ckptDir)) f.listStatus(ckptDir).toSeq else Seq.empty))
-        .map(_.getModificationTime) :+ d.getModificationTime
-      if (nowMs - activity.max > ttlMs) {
-        f.delete(d.getPath, true)
-        Some(d.getPath.toString)
-      } else None
-    }
-  }
+                   nowMs: Long = System.currentTimeMillis()): Seq[String] =
+    Commit.sweep(spark, parentDir, "manifest.json", ttlMs, now = nowMs)
 
   private def requireFormat(format: String): Unit =
     require(Formats.contains(format),
       s"unsupported export format '$format' (one of ${Formats.mkString(",")})")
 
-  /** Reset the output dir for a run: the previous manifest ALWAYS
-    * goes first — it is the completion marker, and it must never
-    * advertise a finished export over chunks a crashed re-run left
-    * half-written (it is rewritten at the end of a successful run,
-    * including a full-skip resume). resume=false additionally clears
-    * all chunks and checkpoints — without that, a re-export with a
-    * smaller chunk count leaves the larger run's orphan chunk dirs
-    * for globbing consumers; resume=true clears them only when the
-    * lineage changed.
+  /** Reset the output dir for a run (inside [[Commit.marked]], which
+    * has already retracted the manifest: it must never advertise a
+    * finished export over chunks a crashed re-run left half-written).
+    * resume=false clears all chunks and checkpoints — without that, a
+    * re-export with a smaller chunk count leaves the larger run's
+    * orphan chunk dirs for globbing consumers; resume=true clears them
+    * only when the lineage changed.
     */
   private def prepareOutDir(spark: SparkSession, outDir: String,
                             ckpt: CheckpointStore, lineage: String,
                             resume: Boolean): Unit = {
-    IndexPaths.delete(spark, s"$outDir/manifest.json")
     if (!resume) {
       IndexPaths.delete(spark, s"$outDir/_checkpoints")
       deleteChunks(spark, outDir)

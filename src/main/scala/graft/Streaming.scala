@@ -25,41 +25,26 @@ object Streaming {
     * The cache key fingerprints the source CONTENT (name/len/mtime,
     * the EntryIndex rule: a changed table must never silently reuse a
     * stale copy — keying on the path alone would stream old data
-    * against a fresh oracle), and the copy goes through a tmp name +
-    * rename so a crash mid-copy can never leave a truncated file that
-    * passes the exists check forever.
+    * against a fresh oracle), and the copy commits atomically
+    * ([[Commit.file]]) so a crash mid-copy can never leave a truncated
+    * file that passes the exists check forever. Copies of retired keys
+    * or regenerated sources age out ([[Commit.sweep]]).
     */
   private def stageDir(spark: SparkSession, dir: String): String = synchronized {
     val srcPath = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
-    val sfs = graft.index.IndexPaths.fs(spark, dir)
     val h = graft.index.IndexPaths.contentTag(spark, srcPath.toString)
-    val out = s"/tmp/graft_stream_src/$h"
-    // stale-key sweep (the retired-cache rule): copies whose staged
-    // file is old belong to retired keys or regenerated sources and
-    // can never be read again — age-based, so concurrently-staged
-    // OTHER tables (different sf dirs in one session) are untouched
-    val root = new org.apache.hadoop.fs.Path("/tmp/graft_stream_src")
-    val rfs = graft.index.IndexPaths.fs(spark, root.toString)
-    if (rfs.exists(root)) {
-      val now = System.currentTimeMillis()
-      rfs.listStatus(root)
-        .filter(s => s.getPath.getName != h &&
-          now - s.getModificationTime > 6L * 3600 * 1000)
-        .foreach(s => rfs.delete(s.getPath, true))
+    val root = "/tmp/graft_stream_src"
+    Commit.sweep(spark, root, "events.parquet", keep = Set(h))
+    val fin = s"$root/$h/events.parquet"
+    if (!Commit.touch(spark, fin)) {
+      val sfs = graft.index.IndexPaths.fs(spark, dir)
+      Commit.file(graft.index.IndexPaths.fs(spark, fin),
+        new org.apache.hadoop.fs.Path(fin)) { out =>
+        val in = sfs.open(srcPath)
+        try org.apache.commons.io.IOUtils.copyLarge(in, out) finally in.close()
+      }
     }
-    val fin = new org.apache.hadoop.fs.Path(s"$out/events.parquet")
-    if (!graft.index.IndexPaths.exists(spark, fin.toString)) {
-      val fs = graft.index.IndexPaths.fs(spark, out)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(out))
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"$out/.events.parquet.tmp")
-      fs.delete(tmp, true)
-      org.apache.hadoop.fs.FileUtil.copy(sfs, srcPath, fs, tmp,
-        false, spark.sparkContext.hadoopConfiguration)
-      if (!fs.rename(tmp, fin) && !fs.exists(fin))
-        throw new java.io.IOException(s"staging commit failed: $fin")
-    }
-    out
+    s"$root/$h"
   }
 
   /** Aggregate events via an actual streaming query (complete mode,
@@ -250,14 +235,7 @@ object Streaming {
     // state-source flush below is the only extra job.) Per-run sink
     // dirs are swept by age, like the staging cache.
     val outRoot = "/tmp/graft_stream_sess_out"
-    val rfs = graft.index.IndexPaths.fs(spark, outRoot)
-    val rootP = new org.apache.hadoop.fs.Path(outRoot)
-    if (rfs.exists(rootP)) {
-      val now = System.currentTimeMillis()
-      rfs.listStatus(rootP)
-        .filter(s => now - s.getModificationTime > 6L * 3600 * 1000)
-        .foreach(s => rfs.delete(s.getPath, true))
-    }
+    Commit.sweep(spark, outRoot, "_SUCCESS")
     val outDir = s"$outRoot/${name}_${System.nanoTime()}"
     merged.write.mode("overwrite").parquet(outDir)
     spark.catalog.dropTempView(name)

@@ -98,13 +98,13 @@ object DocIds {
     // Counts accumulate in a Long — Iterator.size returns Int, which
     // silently wraps past 2^31 rows per partition (real at the
     // 10^12-url design point).
-    val counts = IndexBuilder.timed("docids-rank")(urlsSorted
+    val counts = urlsSorted
       .mapPartitions { it =>
         var n = 0L; var d = 0L; var prev: String = null
         it.foreach { u => n += 1; if (u != prev) { d += 1; prev = u } }
         Iterator.single((d, n))
       }
-      .collect())
+      .collect()
     val hasDups = counts.exists(c => c._2 != c._1)
     val offsets = counts.map(_._1).scanLeft(offset)(_ + _)
     val bc = spark.sparkContext.broadcast(offsets)

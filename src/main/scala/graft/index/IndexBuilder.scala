@@ -32,22 +32,6 @@ import graft.query.BM25
   */
 object IndexBuilder {
 
-  /** Stage-timing diagnostics to stderr when SPARK_GRAFT_BUILD_TIMING
-    * is set — the tool that located the serial fractions behind the
-    * N→4N scaling gap (stderr so bench stdout JSON stays clean).
-    */
-  private val timing = sys.env.contains("SPARK_GRAFT_BUILD_TIMING")
-  private[graft] def timed[T](name: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[build-timing] $name: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
-  }
-
   /** @param numBuckets   term-hash-range segment partitions at rest
     * @param blockSize    postings per compressed block
     * @param numGroups    checkpoint units for the segments stage
@@ -242,7 +226,7 @@ object IndexBuilder {
       // Fill the tf cache first (the docs-meta and terms jobs below
       // run CONCURRENTLY from driver threads and must not both race to
       // compute it).
-      timed("tf-cache-fill")(tf.count())
+      tf.count()
       val obsDocs = new org.apache.spark.sql.Observation()
       val docsJob = scala.concurrent.Future {
         docMeta.repartitionByRange(math.max(1, shufP / 2), $"docId")
@@ -262,9 +246,8 @@ object IndexBuilder {
       // concurrently like the docs/terms jobs. Zero-token docs never
       // enter postings, so their zero slots are never read.
       val normsJob = scala.concurrent.Future {
-        timed("norms-write")(
-          Norms.write(dls.select($"docId", $"dl".cast("int"))
-            .as[(Long, Int)], outDir))
+        Norms.write(dls.select($"docId", $"dl".cast("int"))
+          .as[(Long, Int)], outDir)
       }(scala.concurrent.ExecutionContext.global)
 
       // Per-term df; hot terms (df > saltTarget) get saltCount > 1;
@@ -294,12 +277,11 @@ object IndexBuilder {
         Integer.highestOneBit(math.max(1, shufP / 4)))
       val obsTerms = new org.apache.spark.sql.Observation()
       val termsJob = scala.concurrent.Future {
-        timed("terms-write")(
-          terms.repartition(termsParts,
-              rangePid(col("termHash"), termsParts))
-            .sortWithinPartitions("termHash")
-            .observe(obsTerms, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms"))
+        terms.repartition(termsParts,
+            rangePid(col("termHash"), termsParts))
+          .sortWithinPartitions("termHash")
+          .observe(obsTerms, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
       }(scala.concurrent.ExecutionContext.global)
 
       // Salt: hot-term postings are scattered across sub-run keys by a
@@ -344,31 +326,30 @@ object IndexBuilder {
         // stage either way.
         val encodeStats = IndexStats(buildId, 0, 0.0, 0, cfg.numBuckets,
           cfg.blockSize, 0, 0, 0, 0)
-        timed("segments-fused")(
-          encodeSegments(staged.observe(obsStaged, count(lit(1)).as("n")),
-              encodeStats, cfg)
-            .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-            .parquet(s"$outDir/segments"))
+        encodeSegments(staged.observe(obsStaged, count(lit(1)).as("n")),
+            encodeStats, cfg)
+          .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+          .parquet(s"$outDir/segments")
         fusedWroteSegments = true
       } else {
         // Hash-partition the staging write ON BUCKET: each bucket lands
         // wholly in one task (1-2 dirs per task, bounded files) with NO
         // range-sampling pass — the encode stage re-sorts anyway, so a
         // global order here would be wasted work.
-        timed("staged-write")(staged
+        staged
           .repartition(math.min(shufP, cfg.numBuckets), $"bucket")
           .observe(obsStaged, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-          .parquet(s"$outDir/postings_staged"))
+          .parquet(s"$outDir/postings_staged")
       }
 
       // join the concurrent docs-meta + terms jobs; derive global stats
-      timed("docs-job-wait")(scala.concurrent.Await.result(docsJob,
-        scala.concurrent.duration.Duration.Inf))
-      timed("terms-job-wait")(scala.concurrent.Await.result(termsJob,
-        scala.concurrent.duration.Duration.Inf))
-      timed("norms-job-wait")(scala.concurrent.Await.result(normsJob,
-        scala.concurrent.duration.Duration.Inf))
+      scala.concurrent.Await.result(docsJob,
+        scala.concurrent.duration.Duration.Inf)
+      scala.concurrent.Await.result(termsJob,
+        scala.concurrent.duration.Duration.Inf)
+      scala.concurrent.Await.result(normsJob,
+        scala.concurrent.duration.Duration.Inf)
       tf.unpersist()
       val numTerms = obsTerms.get("n").asInstanceOf[Long]
       val n = obsDocs.get("n").asInstanceOf[Long]
@@ -437,10 +418,9 @@ object IndexBuilder {
           .as[StagedPosting]
         val blocks = encodeSegments(staged, statsNow, cfg)
         val obsBlocks = new org.apache.spark.sql.Observation()
-        timed(s"segments-write-g$g")(
-          blocks.observe(obsBlocks, count(lit(1)).as("n"))
-            .write.mode(SaveMode.Append).partitionBy("bucket")
-            .parquet(s"$outDir/segments"))
+        blocks.observe(obsBlocks, count(lit(1)).as("n"))
+          .write.mode(SaveMode.Append).partitionBy("bucket")
+          .parquet(s"$outDir/segments")
         val nBlocks = obsBlocks.get("n").asInstanceOf[Long]
         val bytes = (lo until hi).map(b =>
           IndexPaths.dirBytes(spark, s"$outDir/segments/bucket=$b")).sum

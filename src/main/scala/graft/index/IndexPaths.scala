@@ -18,21 +18,22 @@ import org.apache.spark.sql.SparkSession
   * }}}
   *
   * All IO goes through Hadoop `FileSystem`, so the same code runs on
-  * local disk here and on HDFS/S3A on a real cluster (the reference's
-  * landing-zone→promote S3 pattern,
-  * /root/reference/packages/core/spheraform_core/storage/backend.py:473-535,
-  * is subsumed by Spark's output committer + Parquet atomic rename).
+  * local disk here and on HDFS/S3A on a real cluster. Parquet tables
+  * commit through Spark's output committer; every sidecar (stats.json,
+  * checkpoints, norms, tombstones, manifests) commits through
+  * [[graft.Commit]], the reference's landing-zone→promote pattern
+  * (spheraform_core `storage/backend.py:473-535`).
   */
 object IndexPaths {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def writeString(spark: SparkSession, path: String, s: String): Unit = {
-    val f = fs(spark, path)
-    val out = f.create(new Path(path), true)
-    try out.write(s.getBytes(StandardCharsets.UTF_8)) finally out.close()
-  }
+  /** Atomic replace ([[graft.Commit.file]]): readers never see a torn
+    * sidecar. */
+  def writeString(spark: SparkSession, path: String, s: String): Unit =
+    graft.Commit.file(fs(spark, path), new Path(path))(
+      _.write(s.getBytes(StandardCharsets.UTF_8)))
 
   def readString(spark: SparkSession, path: String): String = {
     val f = fs(spark, path)
@@ -118,7 +119,7 @@ object IndexPaths {
 }
 
 /** Checkpoint persistence: one JSON file per (stage, unit), committed
-  * atomically (write tmp + rename) after the unit's output is durable.
+  * atomically ([[graft.Commit.file]]) after the unit's output is durable.
   * Resume = listing which units are COMPLETE and skipping them
   * (ancestor: pending-chunk scan,
   * /root/reference/packages/core/spheraform_core/models/job.py:115-167).
@@ -168,17 +169,7 @@ class CheckpointStore(spark: SparkSession, dir: String) {
         s""""status":"${c.status}","rowCount":${c.rowCount},""" +
         s""""bytes":${c.bytes},"lineage":"${c.lineage}",""" +
         s""""startedMs":${c.startedMs},"finishedMs":${c.finishedMs}}"""
-    val tmp = path(c.stage, c.unit) + ".tmp"
-    IndexPaths.writeString(spark, tmp, json)
-    val f = IndexPaths.fs(spark, root)
-    val dst = new Path(path(c.stage, c.unit))
-    // Hadoop rename fails (returns false) when the destination exists —
-    // a recommit (rebuild into an existing dir) must replace, not
-    // silently keep stale checkpoint JSON.
-    if (f.exists(dst)) f.delete(dst, false)
-    if (!f.rename(new Path(tmp), dst))
-      throw new java.io.IOException(
-        s"checkpoint commit failed: rename $tmp -> $dst")
+    IndexPaths.writeString(spark, path(c.stage, c.unit), json)
   }
 
   def list(): Seq[Checkpoint] = {

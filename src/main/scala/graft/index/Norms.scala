@@ -145,62 +145,39 @@ object Norms {
     * rows. Distributed: each stride is owned by exactly one task
     * (groupByKey on strideId), which fills a 4 MB buffer and writes
     * the file — no driver bottleneck, no cross-task file contention.
+    *
+    * Commit protocol ([[graft.Commit.marked]]): the `_complete` marker
+    * Reader requires is retracted first and written last, and every
+    * stride replaces its file atomically ([[graft.Commit.file]] — a
+    * retried twin writes identical bytes, the stride's rows being
+    * deterministic). A job that dies mid-write leaves no marker, so
+    * readers fail loudly instead of serving dl=0 from a partial
+    * sidecar, or stale dl from a previous run into a reused dir.
     */
   def write(docDl: org.apache.spark.sql.Dataset[(Long, Int)],
             dir: String): Unit = {
     val spark = docDl.sparkSession
     import spark.implicits._
-    val conf = new SerConf(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(conf)
+    val bc = spark.sparkContext.broadcast(
+      new SerConf(spark.sparkContext.hadoopConfiguration))
     val target = dir
-    // Commit protocol: strides land under a tmp name and rename into
-    // place (a retried/speculative twin writes identical bytes — the
-    // stride's rows are deterministic — so losing the rename race is
-    // benign); the driver then writes the `_complete` marker that
-    // Reader requires before serving any lookup. A job that dies
-    // mid-write leaves no marker, so readers fail loudly instead of
-    // serving dl=0 from a partial sidecar.
-    val marker = new Path(s"$target/norms/_complete")
-    val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (mfs.exists(marker)) mfs.delete(marker, false)
-    val nStrides = docDl.groupByKey(x => strideOf(x._1))
-      .mapGroups { (sid: Long, it: Iterator[(Long, Int)]) =>
-        val buf = new Array[Byte]((Stride * 4).toInt)
-        it.foreach { case (docId, dl) =>
-          val off = ((docId & (Stride - 1)) * 4).toInt
-          buf(off) = (dl >>> 24).toByte
-          buf(off + 1) = (dl >>> 16).toByte
-          buf(off + 2) = (dl >>> 8).toByte
-          buf(off + 3) = dl.toByte
+    graft.Commit.marked(spark, s"$target/norms/_complete") {
+      docDl.groupByKey(x => strideOf(x._1))
+        .mapGroups { (sid: Long, it: Iterator[(Long, Int)]) =>
+          val buf = new Array[Byte]((Stride * 4).toInt)
+          it.foreach { case (docId, dl) =>
+            val off = ((docId & (Stride - 1)) * 4).toInt
+            buf(off) = (dl >>> 24).toByte
+            buf(off + 1) = (dl >>> 16).toByte
+            buf(off + 2) = (dl >>> 8).toByte
+            buf(off + 3) = dl.toByte
+          }
+          val fin = new Path(filePath(target, sid))
+          graft.Commit.file(fin.getFileSystem(bc.value.value), fin)(
+            _.write(buf))
+          sid
         }
-        // tmp name is attempt-unique: speculative/retried twins of the
-        // same stride task must not truncate each other's in-flight tmp
-        // (a shared name lets B's create(overwrite) tear A's bytes just
-        // before A renames them into place)
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val tmp = new Path(filePath(target, sid) + s".tmp.$attempt")
-        val fin = new Path(filePath(target, sid))
-        val fs = tmp.getFileSystem(bc.value.value)
-        val out = fs.create(tmp, true)
-        try out.write(buf) finally out.close()
-        // Hadoop rename fails (returns false) when the destination
-        // exists. A destination left by a PREVIOUS run into a reused
-        // dir holds STALE dl bytes — treating that rename failure as
-        // success would commit the old dataset under the new marker.
-        // Delete-then-rename is safe: the only other writer of this
-        // path is an identical twin of this task (same deterministic
-        // bytes), so whichever rename wins, the content is correct.
-        if (fs.exists(fin)) fs.delete(fin, false)
-        if (!fs.rename(tmp, fin)) {
-          if (!fs.exists(fin))
-            throw new java.io.IOException(s"norms stride commit failed: $fin")
-          fs.delete(tmp, false) // twin won the re-create race
-        }
-        sid
-      }
-      .count() // materialize the writes
-    val out = mfs.create(marker, true)
-    try out.write(nStrides.toString.getBytes("UTF-8")) finally out.close()
+        .count() // materialize the writes
+    }(_.toString)
   }
 }

@@ -21,11 +21,11 @@ import org.apache.spark.sql.functions._
   * membership, no bloom false positives — a false positive would
   * silently drop a live doc from rankings).
   *
-  * Commit protocol: stride files are written to a tmp name and
-  * renamed; `manifest.json` (count + stride list) is written LAST by
-  * the driver and is the commit marker — readers that find tombstone
-  * parquet but no manifest fall back to the parquet, never to a
-  * half-written sidecar.
+  * Commit protocol ([[graft.Commit.marked]]): stride files replace
+  * atomically; `manifest.json` (count + stride list) is written LAST
+  * by the driver and is the commit marker — readers that find
+  * tombstone parquet but no manifest fall back to the parquet, never
+  * to a half-written sidecar.
   */
 object Tombstones {
 
@@ -45,74 +45,56 @@ object Tombstones {
 
   /** Write the strided sidecar for one generation from its tombstoned
     * docIds. Distributed: each stride is owned by one task (groupByKey
-    * on the stride id), which writes its sorted ids tmp-then-rename;
-    * the driver then commits with the manifest.
+    * on the stride id), which replaces its sorted ids atomically; the
+    * manifest is the marker, retracted first and written last
+    * ([[graft.Commit.marked]]) — a rewrite into a reused dir that
+    * crashes mid-stride leaves NO manifest, never one committing a
+    * mix of new and stale stride files.
     */
   def write(ids: Dataset[Long], indexDir: String): Unit = {
     val spark = ids.sparkSession
     import spark.implicits._
     val dir = dirOf(indexDir)
-    // retract the commit marker FIRST (the Norms.write rule): a
-    // rewrite into a reused dir that crashes mid-stride must leave NO
-    // valid manifest — the old one would commit a mask mixing new and
-    // stale stride files
-    val mp = s"$dir/manifest.json"
-    if (IndexPaths.exists(spark, mp)) {
-      val f = IndexPaths.fs(spark, mp)
-      f.delete(new Path(mp), false)
-    }
-    val conf = new Norms.SerConf(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(conf)
-    val strides = ids.groupByKey(Norms.strideOf)
-      .mapGroups { (sid: Long, it: Iterator[Long]) =>
-        val arr = it.toArray
-        java.util.Arrays.sort(arr)
-        val buf = java.nio.ByteBuffer.allocate(arr.length * 8)
-        arr.foreach(buf.putLong)
-        // attempt-unique tmp: a speculative/retried twin sharing the
-        // tmp name could truncate this attempt's in-flight bytes
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val tmp = new Path(s"$dir/.tmp_s$sid.bin.$attempt")
-        val fin = new Path(s"$dir/s$sid.bin")
-        val fs = tmp.getFileSystem(bc.value.value)
-        val out = fs.create(tmp, true)
-        try out.write(buf.array()) finally out.close()
-        // delete-then-rename: Hadoop rename fails when dest exists, and
-        // a dest left by a previous run into a reused dir holds STALE
-        // ids — only an identical twin (same deterministic bytes) can
-        // race the re-create, so any winner commits correct content
-        if (fs.exists(fin)) fs.delete(fin, false)
-        if (!fs.rename(tmp, fin)) {
-          require(fs.exists(fin), s"tombstone stride commit failed: $fin")
-          fs.delete(tmp, false)
+    val bc = spark.sparkContext.broadcast(
+      new Norms.SerConf(spark.sparkContext.hadoopConfiguration))
+    graft.Commit.marked(spark, s"$dir/manifest.json") {
+      ids.groupByKey(Norms.strideOf)
+        .mapGroups { (sid: Long, it: Iterator[Long]) =>
+          val arr = it.toArray
+          java.util.Arrays.sort(arr)
+          val buf = java.nio.ByteBuffer.allocate(arr.length * 8)
+          arr.foreach(buf.putLong)
+          val fin = new Path(s"$dir/s$sid.bin")
+          graft.Commit.file(fin.getFileSystem(bc.value.value), fin)(
+            _.write(buf.array()))
+          (sid, arr.length.toLong)
         }
-        (sid, arr.length.toLong)
-      }
-      .collect()
-    val count = strides.map(_._2).sum
-    val list = strides.map(_._1).sorted.mkString("[", ",", "]")
-    IndexPaths.writeString(spark, s"$dir/manifest.json",
-      s"""{"count":$count,"strides":$list}""")
+        .collect()
+    } { strides =>
+      val list = strides.map(_._1).sorted.mkString("[", ",", "]")
+      s"""{"count":${strides.map(_._2).sum},"strides":$list}"""
+    }
   }
 
+  private val ManifestRx =
+    """\{\s*"count"\s*:\s*(\d+)\s*,\s*"strides"\s*:\s*\[([\d,\s]*)\]\s*\}""".r
+
   /** Generation manifest: (total count, stride ids); None = no
-    * committed sidecar.
+    * committed sidecar. A manifest that does not parse whole fails
+    * loudly: reading a torn one as fewer tombstones would silently
+    * resurface deleted docs.
     */
   def readManifest(spark: SparkSession,
                    indexDir: String): Option[(Long, Array[Long])] = {
     val p = s"${dirOf(indexDir)}/manifest.json"
     if (!IndexPaths.exists(spark, p)) None
-    else {
-      val m = IndexPaths.readString(spark, p)
-      val count = "\"count\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(m)
-        .map(_.group(1).toLong).getOrElse(0L)
-      val strides = "\"strides\"\\s*:\\s*\\[([^\\]]*)\\]".r
-        .findFirstMatchIn(m).map(_.group(1)).getOrElse("")
-      val arr =
-        if (strides.trim.isEmpty) Array.empty[Long]
-        else strides.split(",").map(_.trim.toLong)
-      Some((count, arr))
+    else IndexPaths.readString(spark, p).trim match {
+      case ManifestRx(count, strides) =>
+        Some((count.toLong, strides.split(",").map(_.trim)
+          .filter(_.nonEmpty).map(_.toLong)))
+      case torn =>
+        throw new IllegalStateException(
+          s"unparseable tombstone manifest $p: '$torn' — rerun Tombstones.write")
     }
   }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Commit
 import graft.index.IndexPaths
 
 /** Persisted approximate-nearest-neighbor index artifacts.
@@ -48,24 +49,7 @@ object AnnIndex {
 
   private def committed(spark: SparkSession, dir: String,
                         lineage: String): Boolean =
-    IndexPaths.exists(spark, statsPath(dir)) &&
-      IndexPaths.parseFlatJson(IndexPaths.readString(spark, statsPath(dir)))
-        .get("lineage").contains(lineage)
-
-  /** Mark the artifact as in-use NOW (marker mtime = last use): a
-    * process that ensured once and keeps serving would otherwise see
-    * its artifact swept mid-read by another process once the TTL
-    * elapses — publish-time refresh alone only covers ensure callers.
-    * Best-effort: a marker swept between exists and setTimes is the
-    * very race this narrows, not one it can fully close; the require
-    * in the serve paths still fails loudly.
-    */
-  private def touch(spark: SparkSession, dir: String): Unit = {
-    val f = IndexPaths.fs(spark, dir)
-    val m = new org.apache.hadoop.fs.Path(statsPath(dir))
-    try if (f.exists(m)) f.setTimes(m, System.currentTimeMillis(), -1)
-    catch { case _: java.io.IOException => () }
-  }
+    Commit.committed(spark, statsPath(dir), lineage)
 
   /** Validate a generation chain (head = committed base of `kind`,
     * tail = `<kind>_delta` artifacts carrying the base's lineage),
@@ -79,7 +63,7 @@ object AnnIndex {
     dirs.foreach { d =>
       require(IndexPaths.exists(spark, statsPath(d)),
         s"no committed ${kind.toUpperCase} artifact at $d")
-      touch(spark, d) // serve/compact = use: keep the aged sweep off it
+      Commit.touch(spark, statsPath(d)) // use: keep the aged sweep off it
     }
     val base = IndexPaths.parseFlatJson(
       IndexPaths.readString(spark, statsPath(dirs.head)))
@@ -678,89 +662,11 @@ object AnnIndex {
 
   private val CacheRoot = "/tmp/graft_ann"
 
-  /** Artifacts unused for this long are deleted by the next ensure
-    * call — a regenerated source table changes the content tag, so
-    * old-tag dirs (each a full vector copy) would otherwise
-    * accumulate forever.
+  /** Build-once publication of a cached artifact under [[CacheRoot]]
+    * ([[Commit.publish]]: pid-unique build dir, rename into place,
+    * aged siblings swept — old-tag dirs are each a full vector copy).
     */
-  private val SweepTtlMs = 6L * 3600 * 1000
-
-  /** Cross-process-safe publication of a shared cached artifact: the
-    * build writes into a pid-unique sibling, then the completed tree
-    * moves to the final name — two JVMs racing the same key never
-    * interleave writes inside one dir (the corruption class the
-    * exportDf pid-keying exists for; here the artifact must be
-    * SHARED across runs, so the pid isolation applies to the build,
-    * not the serve path). Also sweeps aged sibling artifacts.
-    */
-  /** Artifacts this process already verified committed — the repeat
-    * ensure* calls every sim_* query makes would otherwise re-pay the
-    * aged sweep (a listStatus + marker read per sibling) and the
-    * commit check each time. Keyed by dir|lineage (params + source
-    * content tag), so a changed source misses; the 6 h TTL dwarfs a
-    * process lifetime, so skipping the per-call refresh is safe.
-    */
-  private val publishedMemo =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def publish(spark: SparkSession, dir: String, line: String)(
-      build: String => Unit): String = {
-    if (publishedMemo.contains(s"$dir|$line")) return dir
-    sweepAged(spark)
-    val f = IndexPaths.fs(spark, dir)
-    val marker = new org.apache.hadoop.fs.Path(statsPath(dir))
-    if (committed(spark, dir, line)) {
-      // refresh last-USE on the marker: the aged sweep must never
-      // delete an artifact a process keeps serving (serve reads do
-      // not touch mtimes)
-      f.setTimes(marker, System.currentTimeMillis(), -1)
-      publishedMemo.add(s"$dir|$line")
-      return dir
-    }
-    val tmp = s"${dir}_build${ProcessHandle.current().pid()}"
-    IndexPaths.delete(spark, tmp)
-    build(tmp)
-    val dst = new org.apache.hadoop.fs.Path(dir)
-    // a stale half-built final dir (crashed publisher) must go first:
-    // Hadoop rename into an EXISTING dir nests instead of replacing
-    if (f.exists(dst) && !committed(spark, dir, line)) f.delete(dst, true)
-    if (committed(spark, dir, line) ||
-        !f.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      // lost the publish race — serve the winner's committed copy
-      IndexPaths.delete(spark, tmp)
-      if (!committed(spark, dir, line))
-        throw new java.io.IOException(s"ANN artifact publish failed: $dir")
-    }
-    // TOCTOU residue: if a racer renamed between our committed() check
-    // and rename, our tmp tree nested INSIDE the winner's dir (local
-    // rename into an existing dir nests) — drop any such duplicate
-    f.listStatus(dst).filter(_.getPath.getName.contains("_build"))
-      .foreach(s => f.delete(s.getPath, true))
-    publishedMemo.add(s"$dir|$line")
-    dir
-  }
-
-  private def sweepAged(spark: SparkSession): Unit = {
-    val p = new org.apache.hadoop.fs.Path(CacheRoot)
-    val f = IndexPaths.fs(spark, CacheRoot)
-    if (!f.exists(p)) return
-    val now = System.currentTimeMillis()
-    f.listStatus(p).foreach { s =>
-      val name = s.getPath.getName
-      // an in-flight build dir (`…_build<pid>`) has no marker by
-      // design — never sweep one whose builder is still alive, even
-      // past the TTL (a long build is not an abandoned artifact)
-      val livePid = "_build(\\d+)$".r.findFirstMatchIn(name)
-        .flatMap(m => m.group(1).toLongOption)
-        .exists(pid => ProcessHandle.of(pid).isPresent)
-      val marker = new org.apache.hadoop.fs.Path(
-        s"${s.getPath}/ann_stats.json")
-      // marker mtime = last USE (publish AND the serve paths refresh
-      // it), so an artifact any process keeps using stays alive
-      val age = now - (if (f.exists(marker))
-        f.getFileStatus(marker).getModificationTime
-      else s.getModificationTime)
-      if (age > SweepTtlMs && !livePid) f.delete(s.getPath, true)
-    }
-  }
+      build: String => Unit): String =
+    Commit.publish(spark, dir, "ann_stats.json", line)(build)
 }

@@ -588,12 +588,8 @@ object Dedup {
           spark.conf.set("spark.sql.adaptive.enabled", "false")
       }
       while (!converged && it < maxIter) {
-        val tR = System.nanoTime()
         val next = ckpt(smallStar(largeStar(cur)), eager = false)
         val nextSig = signature(next)
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(f"[cc-debug] round $it: " +
-            f"${(System.nanoTime() - tR) / 1e9}%.2fs edges=${nextSig._1}")
         converged = nextSig == curSig
         cur = next
         curSig = nextSig

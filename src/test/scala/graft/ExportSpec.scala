@@ -307,4 +307,47 @@ class ExportSpec extends AnyFunSuite {
     assert(back.count() == want)
     assert(back.filter(length(col("text")) <= 200).count() == 0)
   }
+
+  test("a failing chunk fails the export with no job left running; resume completes") {
+    import spark.implicits._
+    val (_, pages) = fixture
+    val bad = pages.select($"url").as[String].head()
+    // one row throws the first time it is computed; every other row is
+    // slow, so sibling chunk jobs are still running when it does
+    val text = udf { (u: String, t: String) =>
+      if (u == bad && ExportSpec.armed.getAndSet(false))
+        throw new IllegalStateException("injected chunk failure")
+      Thread.sleep(2)
+      t
+    }
+    val src = pages.select($"url", text($"url", $"text").as("text"))
+    val pred = length(col("text")) > 0
+    val out = SparkTestSession.tmpDir("graft_export_fail")
+    ExportSpec.armed.set(true)
+    val e = intercept[Exception](
+      Export.dumpFilter(spark, src, pred, out, chunks = 4))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("injected")), e)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds().isEmpty,
+      "a sibling chunk job outlived the failed export")
+    assert(!IndexPaths.exists(spark, s"$out/manifest.json"))
+    val ckpt = new graft.index.CheckpointStore(spark, out)
+    val committed = ckpt.list().filter(_.status == "COMPLETE").map(_.unit)
+    Thread.sleep(500) // nothing may commit after the call returned
+    assert(ckpt.list().filter(_.status == "COMPLETE").map(_.unit).sorted ==
+      committed.sorted)
+    assert(committed.size < 4)
+    // the source is fixed now (same plan, so the lineage holds):
+    // committed chunks are skipped, the rest complete
+    val res = Export.dumpFilter(spark, src, pred, out, chunks = 4)
+    val want = pages.filter(pred).count()
+    assert(res.skipped == committed.size && res.rows == want)
+    assert(IndexPaths.exists(spark, s"$out/manifest.json"))
+    assert(spark.read.parquet((0 until 4).map(c => s"$out/chunk=$c"): _*)
+      .count() == want)
+  }
+}
+
+object ExportSpec {
+  val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -94,6 +94,19 @@ class DedupClusterSpec extends AnyFunSuite {
     }
   }
 
+  test("self-loops alone and mixed: fast path == forced loop == union-find") {
+    Seq(
+      Seq(5L -> 5L),
+      Seq(5L -> 5L, 1L -> 2L, 2L -> 3L, 3L -> 3L, 7L -> 5L),
+      Seq(4L -> 4L, 9L -> 9L, 9L -> 8L)
+    ).foreach { pairs =>
+      val fast = labelsOf(pairs)
+      val loop = withLoopForced(labelsOf(pairs))
+      assert(fast == unionFind(pairs), s"fast path on $pairs")
+      assert(loop == fast, s"forced loop on $pairs")
+    }
+  }
+
   test("reliable checkpoint dir converges to identical labels") {
     // cluster deployment mode: per-round lineage truncation goes to a
     // durable checkpoint instead of localCheckpoint — same algorithm,
