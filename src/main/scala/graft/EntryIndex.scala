@@ -246,13 +246,13 @@ object EntryIndex {
       .sortBy(t => (t.df, t.term)).take(nTerms)
     val seed = seeds.map(_.term)
     // candidate volume is known from the seed terms' df — size the
-    // count shuffle to it (clamped at the session setting) and merge
+    // count shuffle to it (capped at the session setting) and merge
     // the k-row result on the driver, the searchMulti serve shape;
     // schema/order preserved exactly (createDataFrame with the plan's
     // own schema)
     val width = seeds.map(_.df).sum / 100000L + 4L
-    graft.Adaptive.withShuffleWidth(spark, width) {
-      val out = Searcher.termDocs(spark, Seq(idx), seed)
+    graft.Adaptive.withWidth(spark, width) { scope =>
+      val out = Searcher.termDocs(scope.session, Seq(idx), seed)
         .filter(col("doc_id") =!= seedId)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("shared"))
         .orderBy(desc("shared"), col("doc_id")).limit(k)

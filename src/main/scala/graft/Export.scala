@@ -61,16 +61,17 @@ object Export {
       val t0 = System.currentTimeMillis()
       // input-sized shuffle width for the hit-set joins (the chunk
       // writes themselves are filters over the cache — no shuffle);
-      // everything materializes inside writeChunks, so the scope closes
-      graft.Adaptive.withShuffleWidth(spark,
-        graft.Adaptive.widthFor(srcDocs)) {
-        val ids = Searcher.conjunctiveDocs(spark, indexDirs, query)
+      // everything materializes inside writeChunks
+      graft.Adaptive.withWidth(spark,
+        graft.Adaptive.widthFor(srcDocs)) { scope =>
+        val s = scope.session
+        val ids = Searcher.conjunctiveDocs(s, indexDirs, query)
           .toDF("docId")
-        val meta = indexDirs.map(d => spark.read.parquet(s"$d/docs")
+        val meta = indexDirs.map(d => s.read.parquet(s"$d/docs")
             .select(col("docId"), col("url")))
           .reduce(_ unionByName _)
         val rows = ids.join(meta, "docId")
-          .join(srcDocs.select(col("url"), col("text")), "url")
+          .join(scope(srcDocs).select(col("url"), col("text")), "url")
           .select(col("docId").as("doc_id"), col("url"), col("text"))
           .withColumn("chunk", pmod(xxhash64(col("doc_id")), lit(nChunks)))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -104,9 +105,9 @@ object Export {
     val (total, skipped) = Commit.marked(spark, s"$outDir/manifest.json") {
       prepareOutDir(spark, outDir, ckpt, lineage, resume)
       val t0 = System.currentTimeMillis()
-      graft.Adaptive.withShuffleWidth(spark,
-        graft.Adaptive.widthFor(srcDocs)) {
-        val rows = srcDocs.filter(predicate)
+      graft.Adaptive.withWidth(spark,
+        graft.Adaptive.widthFor(srcDocs)) { scope =>
+        val rows = scope(srcDocs).filter(predicate)
           .withColumn("chunk",
             pmod(xxhash64(col("url")), lit(nChunks)))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -151,44 +152,11 @@ object Export {
         case None => pending += c
       }
     }
-    if (pending.nonEmpty) {
-      // Every chunk job carries this export's tag. The first failure
-      // cancels the running siblings and stops queued ones from
-      // starting; all chunk threads end before this returns or
-      // rethrows, so no export job outlives the call (or writes after
-      // `rows` is unpersisted).
-      val sc = spark.sparkContext
-      val jobTag = s"graft-export-${java.util.UUID.randomUUID()}"
-      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
-      // 2-4 jobs in flight is plenty (guide §2.6) — enough to fill
-      // stage tails, not so many that they fight for task slots
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, pending.size))
-      try {
-        val futs = pending.toSeq.map { c =>
-          pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long =
-              if (failure.get != null) 0L
-              else try {
-                sc.addJobTag(jobTag)
-                writeChunk(spark, rows, outDir, c, ckpt, stage, lineage,
-                  t0, format)
-              } catch {
-                case e: Throwable =>
-                  if (failure.compareAndSet(null, e))
-                    sc.cancelJobsWithTag(jobTag)
-                  throw e
-              }
-          })
-        }
-        val counts = futs.map { f =>
-          try f.get()
-          catch { case _: java.util.concurrent.ExecutionException => 0L }
-        }
-        Option(failure.get).foreach(e => throw e)
-        total += counts.sum
-      } finally pool.shutdown()
-    }
+    // no chunk job outlives the export (or writes after `rows` is
+    // unpersisted)
+    total += Jobs.all(spark)(pending.toSeq.map(c => () =>
+      writeChunk(spark, rows, outDir, c, ckpt, stage, lineage, t0,
+        format))).sum
     (total, skipped)
   }
 

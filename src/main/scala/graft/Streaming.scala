@@ -54,32 +54,35 @@ object Streaming {
   def streamAgg(spark: SparkSession, dir: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val name = s"graft_stream_agg_${counter.incrementAndGet()}"
-    // Stateful streaming fixes its state-store count to the shuffle
-    // setting at query start (the sessionize rule): the aggregation
-    // state here is one row per event_type — session-width state
-    // stores are pure per-batch commit overhead. Scoped to query
-    // construction + the synchronous drain; restored after. (At real
-    // scale this knob belongs to the deployment, sized to state
-    // bytes/executor.)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val q =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_SESS_SHUFFLE", "4"))
-        val q0 = spark.readStream.schema(schema)
-          .parquet(stageDir(spark, dir))
-          .groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_users"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        // a timed-out drain must FAIL, not silently serve the
-        // half-populated memory sink as if it were the final answer
-        require(q0.awaitTermination(120000L), "streamAgg drain timed out")
-        q0
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    spark.table(name).orderBy("event_type")
+    val src = stageDir(spark, dir)
+    Adaptive.withWidth(spark, StateStores) { scope =>
+      val s = scope.session
+      val q = s.readStream.schema(schema).parquet(src)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), sum(col("user_id")).as("sum_users"))
+        .writeStream.outputMode("complete")
+        .format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      // a timed-out drain must FAIL, not silently serve the
+      // half-populated memory sink as if it were the final answer
+      require(q.awaitTermination(120000L), "streamAgg drain timed out")
+      drained(s, name)
+    }.orderBy("event_type")
+  }
+
+  /** State stores (= shuffle width at query start) of the stateful
+    * queries: each pays a commit per data and no-data batch, and this
+    * state needs no more (measured: 8 → 4 shaves ~0.4 s per sessionize
+    * at sf0.1, identical output). At scale the deployment sizes it.
+    */
+  private val StateStores = 4L
+
+  /** A drained memory sink's rows; the plan keeps them, not the view. */
+  private def drained(spark: SparkSession, name: String): DataFrame = {
+    val rows = spark.table(name)
+    spark.catalog.dropTempView(name)
+    rows
   }
 
   /** Open-session state carried between micro-batches. */
@@ -138,23 +141,9 @@ object Streaming {
     // per-run checkpoint (memory sink cannot recover from a previous
     // JVM's checkpoint); nanoTime disambiguates across processes
     val ckpt = s"/tmp/graft_stream_ckpt/${name}_${System.nanoTime()}"
-    // Stateful streaming fixes its state-store count to the shuffle
-    // partition setting at query start; 32 stores × (data batch +
-    // no-data timeout batch + commit each) is pure fixed overhead at
-    // this key cardinality. 4 is plenty wide for the state volume
-    // (measured: 8 → 4 shaves ~0.4s/run at sf0.1 with identical
-    // output) — restore the session setting afterwards. (At real
-    // scale this knob belongs to the deployment, sized to state
-    // bytes / executor.)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val gapMs = gapMinutes.toLong * 60000L
-    // the try/finally must cover query CONSTRUCTION too — an analysis
-    // or start() failure would otherwise leave the whole session pinned
-    // to 8 shuffle partitions for every later query
-    try {
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_SESS_SHUFFLE", "4"))
-    val reader0 = spark.readStream.schema(schema)
+    val sink = Adaptive.withWidth(spark, StateStores) { scope =>
+    val reader0 = scope.session.readStream.schema(schema)
     val reader =
       if (maxFilesPerTrigger > 0)
         reader0.option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -211,7 +200,8 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .start()
     require(q.awaitTermination(120000L), "sessionize drain timed out")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    drained(scope.session, name)
+    }
     // final flush: sessions still open at end-of-stream live only in
     // the state store (their event-time timeout never fired — the
     // final watermark is max event time, which is < lastTs + gap).
@@ -225,7 +215,7 @@ object Streaming {
         col("value").getField("groupState").getField("nEvents")
           .cast("long").as("n_events"))
       .filter(col("n_events") > 0)
-    val merged = spark.table(name).unionByName(open)
+    val merged = sink.unionByName(open)
     // DISTRIBUTED final flush (retires the round-3/4 watch item): the
     // union of the sink table and the state-source read writes
     // straight to a parquet sink — closed AND still-open sessions
@@ -238,7 +228,6 @@ object Streaming {
     Commit.sweep(spark, outRoot, "_SUCCESS")
     val outDir = s"$outRoot/${name}_${System.nanoTime()}"
     merged.write.mode("overwrite").parquet(outDir)
-    spark.catalog.dropTempView(name)
     graft.index.IndexPaths.delete(spark, ckpt)
     spark.read.parquet(outDir).orderBy("user_id", "session_id")
   }

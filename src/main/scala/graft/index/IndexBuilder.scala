@@ -223,12 +223,12 @@ object IndexBuilder {
         .select($"docId", $"url",
           coalesce($"dl", lit(0)).cast("int").as("dl"))
         .as[DocMeta]
-      // Fill the tf cache first (the docs-meta and terms jobs below
-      // run CONCURRENTLY from driver threads and must not both race to
-      // compute it).
+      // Fill the tf cache first (the docs-meta, norms, terms and
+      // postings jobs below run CONCURRENTLY from driver threads and
+      // must not race to compute it).
       tf.count()
       val obsDocs = new org.apache.spark.sql.Observation()
-      val docsJob = scala.concurrent.Future {
+      val docsJob = () => {
         docMeta.repartitionByRange(math.max(1, shufP / 2), $"docId")
           .sortWithinPartitions("docId")
           // avgdl from an INTEGER token-count sum — exact and
@@ -240,15 +240,14 @@ object IndexBuilder {
             max($"dl".cast("long")).as("maxDl"),
             min($"docId").as("minId"))
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-      }(scala.concurrent.ExecutionContext.global)
+      }
 
       // Norms sidecar: (docId, dl) from the cached tf — runs
       // concurrently like the docs/terms jobs. Zero-token docs never
       // enter postings, so their zero slots are never read.
-      val normsJob = scala.concurrent.Future {
+      val normsJob = () =>
         Norms.write(dls.select($"docId", $"dl".cast("int"))
           .as[(Long, Int)], outDir)
-      }(scala.concurrent.ExecutionContext.global)
 
       // Per-term df; hot terms (df > saltTarget) get saltCount > 1;
       // (maxTf, minDl) = the term's best-contribution bound ingredients
@@ -276,13 +275,12 @@ object IndexBuilder {
       val termsParts = math.max(1,
         Integer.highestOneBit(math.max(1, shufP / 4)))
       val obsTerms = new org.apache.spark.sql.Observation()
-      val termsJob = scala.concurrent.Future {
+      val termsJob = () =>
         terms.repartition(termsParts,
             rangePid(col("termHash"), termsParts))
           .sortWithinPartitions("termHash")
           .observe(obsTerms, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
-      }(scala.concurrent.ExecutionContext.global)
 
       // Salt: hot-term postings are scattered across sub-run keys by a
       // hash of docId, so the merge shuffle sees bounded runs. The join
@@ -311,7 +309,7 @@ object IndexBuilder {
           $"docId", $"tf", $"dl", $"posEnc")
         .as[StagedPosting]
       val obsStaged = new org.apache.spark.sql.Observation()
-      if (cfg.numGroups == 1) {
+      val postingsJob = () => if (cfg.numGroups == 1) {
         // FUSED single-group path: the salted posting stream feeds the
         // encode shuffle directly — tokenized tf (cached) → salt join →
         // range shuffle → sort → block encode → segments, one
@@ -343,13 +341,10 @@ object IndexBuilder {
           .parquet(s"$outDir/postings_staged")
       }
 
-      // join the concurrent docs-meta + terms jobs; derive global stats
-      scala.concurrent.Await.result(docsJob,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(termsJob,
-        scala.concurrent.duration.Duration.Inf)
-      scala.concurrent.Await.result(normsJob,
-        scala.concurrent.duration.Duration.Inf)
+      // The four writes stand or fall together: a failed one cancels
+      // the others, and none still writes into outDir once the build
+      // rethrows. Then derive global stats.
+      graft.Jobs.all(spark)(Seq(docsJob, normsJob, termsJob, postingsJob))
       tf.unpersist()
       val numTerms = obsTerms.get("n").asInstanceOf[Long]
       val n = obsDocs.get("n").asInstanceOf[Long]

@@ -61,14 +61,14 @@ object Dedup {
     // stage but flooded the other 15 stages with task floors (40 → 240
     // tasks, steady wall 2.79 → 3.11 s) — the pipeline is job-chain-
     // bound, not stage-bound, at clamped sizes.
-    graft.Adaptive.withShuffleWidth(spark,
-      graft.Adaptive.widthFor(docs), disableAqeWhenClamped = true) {
+    graft.Adaptive.withWidth(spark,
+      graft.Adaptive.widthFor(docs), aqeOff = true) { scope =>
     // (doc_id, shingle-hash) rows straight from the tokenizer — no
     // shingle ARRAY is ever materialized, and every downstream
     // shuffle/sort/agg keys on a long, not a ~25-char string (the
     // round-2 string-keyed plan paid Seq[String] encoders + string
     // sorts; this is the single biggest cost cut).
-    val ex = docs.select(col(idCol).cast("long"), col(textCol).cast("string"))
+    val ex = scope(docs).select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, tx) =>
         TextOps.shingleHashes64Scala(tx).iterator.map(h => (id, h))
@@ -216,11 +216,10 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = numHashes / bands
-    // input-sized shuffle width (see ngramJaccard) — the result
-    // materializes inside materializeAndFree, so the scope is closed
-    graft.Adaptive.withShuffleWidth(spark,
-      graft.Adaptive.widthFor(docs), disableAqeWhenClamped = true) {
-    val sh = shingled(docs, idCol, textCol)
+    // input-sized width, result materialized inside (see ngramJaccard)
+    graft.Adaptive.withWidth(spark,
+      graft.Adaptive.widthFor(docs), aqeOff = true) { scope =>
+    val sh = shingled(scope(docs), idCol, textCol)
     val hashed = sh.as[(Long, Seq[String])].mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
       val hexC = "0123456789abcdef".toCharArray
@@ -345,11 +344,10 @@ object Dedup {
       s"4 chunks of 16 bits guarantee recall only for hamming <= 3, got $maxHamming")
     val spark = docs.sparkSession
     import spark.implicits._
-    // input-sized shuffle width (see ngramJaccard) — closed scope via
-    // the internal materialization
-    graft.Adaptive.withShuffleWidth(spark,
-      graft.Adaptive.widthFor(docs), disableAqeWhenClamped = true) {
-    val sig = simhashSigs(docs, idCol, textCol)
+    // input-sized width, result materialized inside (see ngramJaccard)
+    graft.Adaptive.withWidth(spark,
+      graft.Adaptive.widthFor(docs), aqeOff = true) { scope =>
+    val sig = simhashSigs(scope(docs), idCol, textCol)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val s = math.max(1, saltCells)
     val cand = saltedCellPairs(
@@ -435,19 +433,12 @@ object Dedup {
                maxIter: Int = 30,
                checkpointDir: Option[String] = None): DataFrame =
     // graph-sized width for the PRE-loop jobs too (edge distinct,
-    // signature, fast-path collects) — the loop already right-sizes
-    // itself, but these ran at session width. Closed scope: both exits
-    // materialize (fast path collects; the loop's labeling checkpoints
-    // eagerly).
-    graft.Adaptive.withShuffleWidth(pairs.sparkSession,
-      graft.Adaptive.widthFor(pairs), disableAqeWhenClamped = true) {
-      clustersImpl(pairs, aCol, bCol, maxIter, checkpointDir)
-    }
-
-  private def clustersImpl(pairs: DataFrame, aCol: String, bCol: String,
-               maxIter: Int,
-               checkpointDir: Option[String]): DataFrame = {
-    val spark = pairs.sparkSession
+    // signature, fast-path collects); the loop narrows further to the
+    // edge count. Both exits materialize (fast path collects; the
+    // loop's labeling checkpoints eagerly).
+    graft.Adaptive.withWidth(pairs.sparkSession,
+      graft.Adaptive.widthFor(pairs), aqeOff = true) { scope =>
+    val spark = scope.session
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
     def ckpt(df: DataFrame, eager: Boolean): DataFrame =
       if (checkpointDir.isDefined) df.checkpoint(eager)
@@ -499,7 +490,7 @@ object Dedup {
     // included) and the loop signature all derive from it, so the fast
     // path needs a single bounded collect instead of three jobs
     // (signature + edge collect + endpoint-distinct collect).
-    val raw = ckpt(pairs
+    val raw = ckpt(scope(pairs)
       .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
       .distinct(), eager = false)
     // one aggregation job: raw row count (gates the bounded collect),
@@ -549,44 +540,29 @@ object Dedup {
       // node-count-bounded local result: one partition (one output
       // file, one consumer task) instead of defaultParallelism
       // near-empty slices; coalesce preserves the sorted order
-      return spark.createDataset(labeled).toDF("doc_id", "cluster_id")
+      spark.createDataset(labeled).toDF("doc_id", "cluster_id")
         .coalesce(1)
-    }
-    val nodes = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id")))
-      .distinct()
-    var cur = raw.filter(col("u") =!= col("v"))
-    var converged = curSig._1 == 0L
-    var it = 0
+    } else
     // Right-size the loop's shuffle width to the PAIR GRAPH, not the
     // corpus: thresholded near-dup graphs are orders of magnitude
     // smaller than their corpus (255 edges from 5 000 sf0.1 docs),
     // and every round is several shuffles that would otherwise each
-    // schedule the session's full partition count for a near-empty
-    // graph (locally AQE hides most of it; on a cluster at width
-    // hundreds this is the difference between rounds costing seconds
-    // and minutes). ~1M edges per partition; capped at the session
-    // setting so a genuinely huge graph keeps full width.
-    // Session-conf clamping (same pattern as Streaming.sessionize):
-    // the conf is session-global, so queries planned CONCURRENTLY on
-    // this SparkSession during the loop would compile narrow — the
-    // engine's contract surfaces are single-threaded per session; a
-    // shared-session deployment should wrap clusters() in its own
-    // session. A non-numeric platform setting (e.g. "auto") skips the
-    // clamp instead of throwing.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val loopParts = prevShuffle.toLongOption.map(p =>
-      math.max(1L, math.min(p, curSig._1 / 1000000L + 1L)))
-    try {
-      loopParts.foreach { lp =>
-        spark.conf.set("spark.sql.shuffle.partitions", lp.toString)
-        // with the width already right-sized there is nothing for AQE
-        // to adapt, and its per-stage re-planning pause is the
-        // dominant cost of a round at small graph sizes
-        if (lp < prevShuffle.toLong)
-          spark.conf.set("spark.sql.adaptive.enabled", "false")
-      }
+    // schedule the full partition count for a near-empty graph
+    // (locally AQE hides most of it; on a cluster at width hundreds
+    // this is the difference between rounds costing seconds and
+    // minutes). ~1M edges per partition; a genuinely huge graph keeps
+    // full width. With the width right-sized, AQE's per-stage
+    // re-planning pause is the dominant cost of a round at small
+    // graph sizes, so the scope turns it off.
+    graft.Adaptive.withWidth(spark, curSig._1 / 1000000L + 1L,
+        aqeOff = true) { loop =>
+      val edges = loop(raw)
+      val nodes = edges.select(col("u").as("id"))
+        .union(edges.select(col("v").as("id")))
+        .distinct()
+      var cur = edges.filter(col("u") =!= col("v"))
+      var converged = curSig._1 == 0L
+      var it = 0
       while (!converged && it < maxIter) {
         val next = ckpt(smallStar(largeStar(cur)), eager = false)
         val nextSig = signature(next)
@@ -600,20 +576,17 @@ object Dedup {
       // converged star graph: every non-root has exactly its (node →
       // component-min) edge; the groupBy-min is insurance, not
       // semantics. Labeling is materialized INSIDE the right-sized
-      // window (eager checkpoint — the output is node-count-bounded,
+      // scope (eager checkpoint — the output is node-count-bounded,
       // far smaller than the corpus) so the caller's consumption
-      // never re-plans the loop tail at session width.
+      // never re-plans the loop tail at the caller's width.
       val mapping = cur.groupBy(col("u")).agg(min(col("v")).as("comp"))
         .select(col("u").as("id"), col("comp"))
       ckpt(nodes.join(mapping, Seq("id"), "left")
         .select(col("id").as("doc_id"),
           coalesce(col("comp"), col("id")).as("cluster_id"))
         .orderBy("doc_id"), eager = true)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
-  }
+    }
 
   /** End-to-end near-dup dedup: resolve `pairs` into clusters, keep
     * one doc per cluster (the minimum id — the stable-keeper rule of
@@ -649,19 +622,17 @@ object Dedup {
     val spark = emb.sparkSession
     import spark.implicits._
     val bN = math.max(1, numBlocks)
-    // Width for the cell shuffle from the WORK, not the input bytes:
-    // the groupByKey has exactly B(B+1)/2 keys and each key carries an
-    // O((n/B)²·dims) scoring loop, so the input-byte estimate (a few
-    // MB → ~4 partitions) starves the one compute-dense stage of the
-    // pipeline (measured at sf0.1: 3.2 s of task time serialized onto
-    // 5 tasks). One partition per cell is the natural shape; still
-    // capped at the session width, so a big cluster keeps its width.
-    val cells = bN.toLong * (bN + 1) / 2
-    graft.Adaptive.withShuffleWidth(spark,
-      math.max(graft.Adaptive.widthFor(emb), cells),
-      disableAqeWhenClamped = true) {
+    // The cell shuffle has exactly B(B+1)/2 keys, each an
+    // O((n/B)²·dims) scoring loop: an input-byte width (a few MB → ~4
+    // partitions) starves this one compute-dense stage (measured at
+    // sf0.1: 3.2 s of task time on 5 tasks), and AQE would coalesce its
+    // tiny shuffle further. So its width is in the plan — a repartition
+    // by number, which AQE leaves alone — at every session width.
+    val cellCount = bN * (bN + 1) / 2
+    graft.Adaptive.withWidth(spark,
+      graft.Adaptive.widthFor(emb), aqeOff = true) { scope =>
     val thr = threshold
-    val cells = emb.select(col(idCol).cast("long"), col(vecCol))
+    val blockRows = scope(emb).select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Seq[Float])]
       .flatMap { case (id, vs) =>
         val vec = vs.toArray
@@ -673,7 +644,9 @@ object Dedup {
         Iterator.range(blk, bN).map(j => (blk * bN + j, id, vec, nrm)) ++
           Iterator.range(0, blk).map(i => (i * bN + blk, id, vec, nrm))
       }
-    cells.groupByKey(_._1).flatMapGroups { (cell, it) =>
+    blockRows.repartition(cellCount, col("_1")).groupBy(col("_1"))
+      .as[Int, (Int, Long, Array[Float], Double)]
+      .flatMapGroups { (cell, it) =>
       val ci = cell / bN
       val cj = cell % bN
       val a = scala.collection.mutable.ArrayBuffer

@@ -158,13 +158,12 @@ object Searcher {
     // The gather shuffle has EXACTLY |queries| × numRanges keys (and
     // the probe job |queries|): planning it wider than that is pure
     // per-task scheduling waste, and the whole computation runs
-    // eagerly inside this call (partials.collect) — so the width clamp
-    // is closed-scope. Clamped at the session setting: a big batch
-    // keeps full cluster width.
-    graft.Adaptive.withShuffleWidth(spark,
-      queries.size.toLong * math.max(1, numRanges)) {
-      searchMultiImpl(spark, indexDirs, queries, k, mode, numRanges,
-        probeMinTotalDf, offset)
+    // eagerly inside this call (partials.collect). Capped at the
+    // session setting: a big batch keeps full cluster width.
+    graft.Adaptive.withWidth(spark,
+      queries.size.toLong * math.max(1, numRanges)) { scope =>
+      searchMultiImpl(scope.session, indexDirs, queries, k, mode,
+        numRanges, probeMinTotalDf, offset)
     }
 
   private def searchMultiImpl(spark: SparkSession, indexDirs: Seq[String],

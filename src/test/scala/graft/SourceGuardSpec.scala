@@ -2,26 +2,37 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Durable outputs commit through [[Commit]] only: a rename, an mtime
-  * refresh or a TTL literal anywhere else in the engine sources is a
-  * second commit protocol growing beside it.
+/** One mechanism per concern in the engine sources. Durable outputs
+  * commit through [[Commit]] only: a rename, an mtime refresh or a TTL
+  * literal anywhere else is a second commit protocol growing beside it.
+  * Shuffle widths are set through [[Adaptive]] only: a session setting
+  * written anywhere else mutates a session other operators share.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
-  test("rename, setTimes and TTL literals appear only in Commit.scala") {
+  /** Lines of `src/main/scala` outside `allowedIn` containing a banned string. */
+  private def hits(banned: Seq[String], allowedIn: String): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root")
-    val banned = Seq(".rename(", "setTimes(", "3600 * 1000")
-    val hits = java.nio.file.Files.walk(root).toArray
+    java.nio.file.Files.walk(root).toArray
       .map(_.asInstanceOf[java.nio.file.Path])
       .filter(p => p.toString.endsWith(".scala") &&
-        p.getFileName.toString != "Commit.scala")
+        p.getFileName.toString != allowedIn)
       .flatMap { p =>
         val lines = java.nio.file.Files.readAllLines(p).toArray.map(_.toString)
         lines.zipWithIndex.collect {
           case (l, i) if banned.exists(l.contains) => s"$p:${i + 1}: ${l.trim}"
         }
-      }
-    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+      }.toSeq
+  }
+
+  test("rename, setTimes and TTL literals appear only in Commit.scala") {
+    val found = hits(Seq(".rename(", "setTimes(", "3600 * 1000"), "Commit.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("session settings are written only in Adaptive.scala") {
+    val found = hits(Seq("conf.set(", "GRAFT_SESS_SHUFFLE"), "Adaptive.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
