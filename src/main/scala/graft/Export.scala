@@ -67,7 +67,7 @@ object Export {
         val s = scope.session
         val ids = Searcher.conjunctiveDocs(s, indexDirs, query)
           .toDF("docId")
-        val meta = indexDirs.map(d => s.read.parquet(s"$d/docs")
+        val meta = indexDirs.map(d => IndexPaths.docs(s, d)
             .select(col("docId"), col("url")))
           .reduce(_ unionByName _)
         val rows = ids.join(meta, "docId")

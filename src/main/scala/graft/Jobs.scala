@@ -4,6 +4,7 @@ import java.util.concurrent.{Callable, ExecutionException, Executors,
   TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.SparkSession
 
 /** Spark jobs submitted from concurrent driver threads that stand or
@@ -18,7 +19,8 @@ object Jobs {
     * group is not overwritten). The first failure cancels the
     * siblings' jobs (also those a sibling starts later) and keeps
     * queued bodies from starting; every thread ends before this
-    * returns or rethrows that failure, so no job outlives the call.
+    * returns or rethrows that failure, so no job outlives the call —
+    * and, before the rethrow, no task either ([[settle]]).
     */
   def all[T](spark: SparkSession)(bodies: Seq[() => T]): Seq[T] = {
     val sc = spark.sparkContext
@@ -43,8 +45,27 @@ object Jobs {
         }
         try f.get() catch { case _: ExecutionException => None }
       }
-      Option(failure.get).foreach(e => throw e)
+      Option(failure.get).foreach { e => settle(sc, tag); throw e }
       out.map(_.get)
     } finally pool.shutdown()
+  }
+
+  /** Longest wait for the tasks of a failed group to end. */
+  private val SettleMs = 10000L
+
+  /** A cancelled job ends before its running tasks do: Spark kills them
+    * asynchronously, and a killed write task can still put its
+    * `_temporary/.../attempt_*` file down after the job failed — where
+    * a rerun into the same directory would race it. Wait, at most
+    * [[SettleMs]], until every job of `tag` has ended and none of its
+    * stages runs a task.
+    */
+  private def settle(sc: SparkContext, tag: String): Unit = {
+    val st = sc.statusTracker
+    def busy = st.getJobIdsForTag(tag).exists(id => st.getJobInfo(id).exists(j =>
+      j.status == JobExecutionStatus.RUNNING ||
+        j.stageIds.exists(s => st.getStageInfo(s).exists(_.numActiveTasks > 0))))
+    val deadline = System.currentTimeMillis() + SettleMs
+    while (busy && System.currentTimeMillis() < deadline) Thread.sleep(20)
   }
 }

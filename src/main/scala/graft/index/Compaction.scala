@@ -74,7 +74,7 @@ object Compaction {
       // 1. docs meta: per url, the row from the LATEST generation wins
       //    (re-crawl upsert); losers' docIds drop out of everything
       val docsAll = liveGens.zipWithIndex.map { case (d, i) =>
-        spark.read.parquet(s"$d/docs").withColumn("gen", lit(i))
+        IndexPaths.docs(spark, d).withColumn("gen", lit(i))
       }.reduce(_ unionByName _)
       val ranked = docsAll.withColumn("rn",
         row_number().over(Window.partitionBy($"url").orderBy(desc("gen"),
@@ -84,7 +84,7 @@ object Compaction {
         .sortWithinPartitions("docId")
         .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
     }
-    val written = spark.read.parquet(s"$outDir/docs")
+    val written = IndexPaths.docs(spark, outDir).toDF()
     // 2. postings: decoded once, shared by the terms agg and every
     //    segments group. Cache-vs-recompute is a CONFIG
     //    (`graft.compaction.cacheDecoded`, default true): the cache is
@@ -160,7 +160,7 @@ object Compaction {
     // 4. re-key, merge-encode — one checkpointed bucket group at a
     //    time (mirrors IndexBuilder's segments stage)
     val stats = IndexPaths.readStats(spark, outDir)
-    val termsRead = spark.read.parquet(s"$outDir/terms")
+    val termsRead = IndexPaths.terms(spark, outDir)
     // the ONE bucket expression (IndexBuilder.rangePid): build and
     // compaction must agree on the layout or pruning breaks
     val bucketCol = IndexBuilder.rangePid(col("termHash"), cfg.numBuckets)
@@ -243,10 +243,9 @@ object Compaction {
       IndexPaths.exists(spark, s"$d/tombstones"))
     if (tombGens.nonEmpty) {
       val inputIds = liveGens.map(d =>
-        spark.read.parquet(s"$d/docs").select($"docId")).reduce(_ union _)
+        IndexPaths.docs(spark, d).select($"docId")).reduce(_ union _)
       val obs = new org.apache.spark.sql.Observation()
-      tombGens.map(d => spark.read.parquet(s"$d/tombstones")
-          .select($"docId"))
+      tombGens.map(IndexPaths.tombstones(spark, _).toDF())
         .reduce(_ union _).distinct()
         .join(inputIds, Seq("docId"), "left_anti")
         .observe(obs, count(lit(1)).as("n"))
@@ -255,8 +254,7 @@ object Compaction {
       if (obs.get("n").asInstanceOf[Long] == 0L)
         IndexPaths.delete(spark, s"$outDir/tombstones")
       else
-        Tombstones.write(spark.read.parquet(s"$outDir/tombstones")
-          .select($"docId").as[Long], outDir)
+        Tombstones.write(IndexPaths.tombstones(spark, outDir), outDir)
     }
     stats
   }
@@ -273,8 +271,7 @@ object Compaction {
       written: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    gens.map(d =>
-        spark.read.parquet(s"$d/segments").as[SegmentBlock])
+    gens.map(IndexPaths.segments(spark, _))
       .reduce(_ union _)
       .flatMap { b =>
         val ds = Codec.decodeDeltas(b.docIdsEnc, b.n, b.firstDocId)

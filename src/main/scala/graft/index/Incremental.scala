@@ -42,15 +42,14 @@ object Incremental {
   def readTombstones(spark: SparkSession, indexDir: String): Seq[Long] =
     if (!IndexPaths.exists(spark, s"$indexDir/tombstones"))
       Seq.empty
-    else spark.read.parquet(s"$indexDir/tombstones")
-      .select(col("docId")).collect().map(_.getLong(0)).toSeq
+    else IndexPaths.tombstones(spark, indexDir).collect().toSeq
 
   /** Tombstone cardinality without collecting ids (parquet metadata
     * count — no row scan).
     */
   def tombstoneParquetCount(spark: SparkSession, indexDir: String): Long =
     if (!IndexPaths.exists(spark, s"$indexDir/tombstones")) 0L
-    else spark.read.parquet(s"$indexDir/tombstones").count()
+    else IndexPaths.tombstones(spark, indexDir).count()
 
   /** The base generation's ingestion watermark, persisted beside its
     * stats (written by [[buildDelta]] and [[watermarkOf]] callers).
@@ -276,9 +275,8 @@ object Incremental {
       // PLAIN shuffle join, no broadcast hint: a full re-crawl's url
       // set is O(corpus) — forcing a broadcast here was the round-2
       // OOM hazard; Spark/AQE still broadcasts small deltas on its own
-      val deltaUrls = spark.read.parquet(s"$deltaDir/docs")
-        .select(col("url"))
-      baseDirs.map(d => spark.read.parquet(s"$d/docs")
+      val deltaUrls = IndexPaths.docs(spark, deltaDir).select(col("url"))
+      baseDirs.map(d => IndexPaths.docs(spark, d)
           .select(col("docId"), col("url")))
         .reduce(_ unionByName _)
         .join(deltaUrls, "url")
@@ -287,9 +285,7 @@ object Incremental {
         .parquet(s"$deltaDir/tombstones")
       // strided sidecar: lets the serve path mask without ever
       // collecting the set ([[Tombstones]] switches modes on count)
-      import spark.implicits._
-      Tombstones.write(spark.read.parquet(s"$deltaDir/tombstones")
-        .select(col("docId")).as[Long], deltaDir)
+      Tombstones.write(IndexPaths.tombstones(spark, deltaDir), deltaDir)
     }
     val maxTs = pages.agg(max(col("warc_ts"))).head().getTimestamp(0)
     if (maxTs != null) writeWatermark(spark, deltaDir, maxTs)

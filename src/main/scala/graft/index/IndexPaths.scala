@@ -3,7 +3,8 @@ package graft.index
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Index layout on the (Hadoop-abstracted) filesystem:
   *
@@ -13,6 +14,8 @@ import org.apache.spark.sql.SparkSession
   *   <dir>/postings_staged/       StagedPosting parquet, partitionBy(bucket)
   *   <dir>/segments/              SegmentBlock parquet, partitionBy(bucket),
   *                                sorted by (termHash, skey, blockId)
+  *   <dir>/tombstones/            docId parquet of replaced versions
+  *                                (re-crawl deltas only)
   *   <dir>/stats.json             IndexStats sidecar
   *   <dir>/_checkpoints/          one JSON per (stage, unit)
   * }}}
@@ -28,6 +31,30 @@ object IndexPaths {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  // One typed reader per index artifact, each with the schema its
+  // writer uses: a read starts no schema-inference job (an untyped
+  // read starts one per call, so one per generation per query), and
+  // an empty generation — a dir holding only `_SUCCESS` — reads as
+  // zero rows instead of failing inference.
+
+  def segments(spark: SparkSession, dir: String): Dataset[SegmentBlock] =
+    typed(spark, s"$dir/segments", Encoders.product[SegmentBlock])
+
+  def terms(spark: SparkSession, dir: String): Dataset[TermMeta] =
+    typed(spark, s"$dir/terms", Encoders.product[TermMeta])
+
+  def docs(spark: SparkSession, dir: String): Dataset[DocMeta] =
+    typed(spark, s"$dir/docs", Encoders.product[DocMeta])
+
+  /** Tombstoned docIds, one `docId` column. */
+  def tombstones(spark: SparkSession, dir: String): Dataset[Long] =
+    spark.read.schema(StructType(Seq(StructField("docId", LongType))))
+      .parquet(s"$dir/tombstones").as(Encoders.scalaLong)
+
+  private def typed[T](spark: SparkSession, path: String,
+                       enc: Encoder[T]): Dataset[T] =
+    spark.read.schema(enc.schema).parquet(path).as(enc)
 
   /** Atomic replace ([[graft.Commit.file]]): readers never see a torn
     * sidecar. */

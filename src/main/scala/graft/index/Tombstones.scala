@@ -6,20 +6,28 @@ import org.apache.spark.sql.functions._
 
 /** Strided tombstone sidecar + the serve-path mask.
   *
-  * Small tombstone sets (the common transient window between a delta
-  * and its compaction) are served as a broadcast hash set — one driver
-  * collect, O(1) per-posting checks. A FULL re-crawl, though, can
-  * tombstone an O(corpus) docId set; collecting that into a driver Set
-  * and shipping it to every task is the OOM the round-2 advice
-  * flagged. Above [[broadcastThreshold]] the mask switches to a
-  * strided sidecar, the Lucene-deletes shape on the [[Norms]] stride
-  * grid: `<gen>/tombstones_strided/s<strideId>.bin` holds the SORTED
+  * Every re-crawl delta commits its tombstoned docIds twice: as
+  * `tombstones/` parquet (the table compaction and tools read) and as
+  * a strided sidecar on the [[Norms]] stride grid, the Lucene-deletes
+  * shape: `<gen>/tombstones_strided/s<strideId>.bin` holds the SORTED
   * tombstoned docIds of that docId stride as raw big-endian longs, and
-  * a gather task loads only the strides its docId window [lo, hi)
-  * overlaps — per-task memory is the range's own tombstones, never the
-  * corpus's. Exactness is preserved in both modes (hash/binary-search
-  * membership, no bloom false positives — a false positive would
-  * silently drop a live doc from rankings).
+  * `manifest.json` lists the count and the stride ids. The serve path
+  * reads the sidecar, never the parquet, so building a mask starts no
+  * Spark job:
+  *  - at most [[broadcastThreshold]] tombstones in total: the driver
+  *    reads every listed stride file into one broadcast hash set
+  *    ([[SetMask]]) — O(1) per-posting checks; the threshold bounds
+  *    the read;
+  *  - above it: [[StridedMask]] — a gather task loads only the strides
+  *    its docId window [lo, hi) overlaps, so per-task memory is the
+  *    range's own tombstones, never the corpus's (collecting a full
+  *    re-crawl's O(corpus) set into a driver Set is the OOM the
+  *    round-2 advice flagged).
+  * Only a generation with tombstone parquet but no committed manifest
+  * (legacy, or a crash before the sidecar was written) is read from
+  * the parquet, and only while small. Exactness holds in every mode
+  * (hash/binary-search membership, no bloom false positives — a false
+  * positive would silently drop a live doc from rankings).
   *
   * Commit protocol ([[graft.Commit.marked]]): stride files replace
   * atomically; `manifest.json` (count + stride list) is written LAST
@@ -98,6 +106,21 @@ object Tombstones {
     }
   }
 
+  /** One committed stride file: its sorted docIds. */
+  private def readStride(conf: org.apache.hadoop.conf.Configuration,
+                         indexDir: String, sid: Long): Array[Long] = {
+    val p = new Path(s"${dirOf(indexDir)}/s$sid.bin")
+    val fs = p.getFileSystem(conf)
+    val len = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
+    try {
+      val bytes = new Array[Byte](len.toInt)
+      in.readFully(0L, bytes)
+      val bb = java.nio.ByteBuffer.wrap(bytes)
+      Array.fill((len / 8).toInt)(bb.getLong)
+    } finally in.close()
+  }
+
   /** The serve-path mask, chosen per query batch. Serializable — ships
     * inside task closures; the strided variant loads stride files
     * lazily and caches a bounded number per task.
@@ -168,16 +191,7 @@ object Tombstones {
       val key = (g, sid)
       var arr = cache.get(key)
       if (arr == null) {
-        val p = new Path(s"${dirOf(dirsWithStrides(g)._1)}/s$sid.bin")
-        val fs = p.getFileSystem(conf.value)
-        val len = fs.getFileStatus(p).getLen
-        val in = fs.open(p)
-        try {
-          val bytes = new Array[Byte](len.toInt)
-          in.readFully(0L, bytes)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-          arr = Array.fill((len / 8).toInt)(bb.getLong)
-        } finally in.close()
+        arr = readStride(conf.value, dirsWithStrides(g)._1, sid)
         cache.put(key, arr)
       }
       arr
@@ -198,20 +212,29 @@ object Tombstones {
   }
 
   /** Build the mask for a set of generations: manifest counts decide
-    * broadcast-Set vs strided; generations without a committed sidecar
-    * fall back to their (small, pre-sidecar) tombstone parquet.
+    * broadcast-Set vs strided; below the threshold the Set is read from
+    * the committed stride files on the driver (no Spark job). Only
+    * generations without a committed sidecar read their (small,
+    * pre-sidecar) tombstone parquet.
     */
   def maskFor(spark: SparkSession, indexDirs: Seq[String]): Mask = {
     val thr = broadcastThreshold(spark)
     val manifests = indexDirs.map(d => d -> readManifest(spark, d))
+    val parquetCounts = manifests.collect {
+      case (d, None) => d -> Incremental.tombstoneParquetCount(spark, d)
+    }.toMap
     val total = manifests.map {
-      case (d, Some((n, _))) => n
-      case (d, None) => Incremental.tombstoneParquetCount(spark, d)
+      case (_, Some((n, _))) => n
+      case (d, None) => parquetCounts(d)
     }.sum
     if (total == 0) EmptyMask
-    else if (total <= thr)
-      SetMask(indexDirs
-        .flatMap(d => Incremental.readTombstones(spark, d)).toSet)
+    else if (total <= thr) {
+      val conf = spark.sparkContext.hadoopConfiguration
+      SetMask(manifests.flatMap {
+        case (d, Some((_, strides))) => strides.flatMap(readStride(conf, d, _)).toSeq
+        case (d, None) => Incremental.readTombstones(spark, d)
+      }.toSet)
+    }
     else {
       // strided for every generation that committed a sidecar; a
       // legacy generation without one contributes through a small
@@ -229,7 +252,7 @@ object Tombstones {
       // driver Set this whole mechanism exists to prevent
       manifests.foreach {
         case (d, None) =>
-          val c = Incremental.tombstoneParquetCount(spark, d)
+          val c = parquetCounts(d)
           require(c <= thr,
             s"$d has $c tombstones but no committed strided sidecar " +
               s"(> broadcast threshold $thr) — rerun Tombstones.write " +

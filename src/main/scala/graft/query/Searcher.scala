@@ -42,53 +42,71 @@ object Searcher {
   case object Or extends Mode  // disjunctive BM25 top-k (default)
   case object And extends Mode // conjunctive: doc must match all terms
 
-  /** Per-index driver-side dictionary cache: term → Some(meta) or
-    * None (negative entry). A serving deployment keeps this hot; at
+  /** Per-generation driver-side dictionary cache: term → Some(meta)
+    * or None (negative entry). A serving deployment keeps this hot; at
     * web scale it holds only QUERIED terms, never the dictionary.
-    * Bounded defensively; an index rebuild under the same path must
-    * call [[invalidateTermCache]].
+    * Bounded defensively. An entry belongs to one COMMIT of its
+    * directory — the mtime and length of its `stats.json`, which every
+    * build and compaction replaces atomically ([[graft.Commit.file]])
+    * — so a directory rebuilt in the same JVM never serves the
+    * previous build's df, saltCount or negative entries.
     */
-  private val termCaches =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.concurrent.ConcurrentHashMap[String, Option[TermMeta]]]()
+  private final class TermCache(val commit: (Long, Long)) {
+    val entries =
+      new java.util.concurrent.ConcurrentHashMap[String, Option[TermMeta]]()
+  }
 
-  private def termCacheFor(dir: String) = {
-    val c = termCaches.computeIfAbsent(dir,
-      _ => new java.util.concurrent.ConcurrentHashMap[String,
-        Option[TermMeta]]())
-    if (c.size > 200000) c.clear() // crude bound; cache is advisory
-    c
+  private val termCaches =
+    new java.util.concurrent.ConcurrentHashMap[String, TermCache]()
+
+  private def termCacheFor(spark: SparkSession, dir: String) = {
+    val st = IndexPaths.fs(spark, dir)
+      .getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/stats.json"))
+    val commit = (st.getModificationTime, st.getLen)
+    val c = termCaches.compute(dir, (_, old) =>
+      if (old != null && old.commit == commit) old else new TermCache(commit))
+    if (c.entries.size > 200000) c.entries.clear() // crude bound; advisory
+    c.entries
   }
 
   def invalidateTermCache(dir: String): Unit = termCaches.remove(dir)
 
-  /** Per-generation pruned dictionary lookup through the shared
-    * positive/negative term cache: one termHash-pushdown scan per
-    * generation fetches only cache misses (the dictionary is
-    * range-sorted by termHash, so the scan touches 1-2 row groups per
-    * term, never the dictionary). Shared by the BM25 and match paths —
-    * the logic is exactness-adjacent (negative caching, collision
-    * filter), so exactly one copy exists.
+  private val TermMetaCols =
+    org.apache.spark.sql.Encoders.product[TermMeta].schema.fieldNames.toSeq.map(col)
+
+  /** Pruned dictionary lookup through the shared positive/negative term
+    * cache: the cache misses of every generation are fetched by ONE job
+    * — a union of per-generation termHash-pushdown scans (the
+    * dictionary is range-sorted by termHash, so each touches 1-2 row
+    * groups per term, never the dictionary), tagged with the
+    * generation. Shared by the BM25 and match paths — the logic is
+    * exactness-adjacent (negative caching, collision filter), so
+    * exactly one copy exists.
     */
   private def lookupMetas(spark: SparkSession, indexDirs: Seq[String],
                           terms: Seq[String]): Seq[Map[String, TermMeta]] = {
     import spark.implicits._
-    indexDirs.map { d =>
-      val cache = termCacheFor(d)
-      val missing = terms.filterNot(cache.containsKey)
-      if (missing.nonEmpty) {
-        val missingHashes = missing.map(IndexBuilder.xxhash)
-        val fetched = spark.read.parquet(s"$d/terms")
-          .filter($"termHash".isin(missingHashes: _*))
-          .as[TermMeta].collect()
-          .filter(t => missing.contains(t.term)) // hash-collision guard
-          .map(t => t.term -> t).toMap
-        missing.foreach(t =>
-          cache.put(t, fetched.get(t))) // negative-cache absent terms
-      }
-      terms.flatMap(t =>
-        Option(cache.get(t)).flatten.map(t -> _)).toMap
+    val caches = indexDirs.map(termCacheFor(spark, _))
+    val missing = caches.map(c => terms.filterNot(c.containsKey))
+    val scans = indexDirs.indices.filter(missing(_).nonEmpty).map { g =>
+      IndexPaths.terms(spark, indexDirs(g))
+        .filter($"termHash".isin(missing(g).map(IndexBuilder.xxhash): _*))
+        // a column projection, not a typed map: the tasks then run
+        // no per-row object (de)serialization code
+        .select(lit(g).as("_1"), struct(TermMetaCols: _*).as("_2"))
+        .as[(Int, TermMeta)]
     }
+    if (scans.nonEmpty) {
+      val fetched = scans.reduce(_ union _).collect()
+        .filter { case (g, t) => missing(g).contains(t.term) } // hash-collision guard
+        .groupBy(_._1)
+      missing.zipWithIndex.foreach { case (ms, g) =>
+        val got = fetched.getOrElse(g, Array.empty).map(x => x._2.term -> x._2).toMap
+        ms.foreach(t => caches(g).put(t, got.get(t))) // negative-cache absent terms
+      }
+    }
+    caches.map(cache => terms.flatMap(t =>
+      Option(cache.get(t)).flatten.map(t -> _)).toMap)
   }
 
   /** Storage keys of a term in one generation: the salted sub-run keys
@@ -319,9 +337,8 @@ object Searcher {
           val hs = probeUses.keys.map(IndexBuilder.xxhash).toSeq
           val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets))
             .distinct
-          spark.read.parquet(s"$d/segments")
+          IndexPaths.segments(spark, d)
             .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-            .as[SegmentBlock]
         }.reduce(_ union _)
         val kLocal = depth
         val bcGensP = bcGens
@@ -397,10 +414,9 @@ object Searcher {
       val idxHashes = idxKeys.map(IndexBuilder.xxhash)
       val idxBuckets = idxHashes
         .map(h => IndexBuilder.bucketOf(h, st.numBuckets)).distinct
-      spark.read.parquet(s"$d/segments")
+      IndexPaths.segments(spark, d)
         .filter($"bucket".isin(idxBuckets: _*) &&
           $"termHash".isin(idxHashes: _*))
-        .as[SegmentBlock]
     }.reduce(_ union _)
 
     val scattered = blocks
@@ -574,9 +590,8 @@ object Searcher {
           storageKeys(term, tm).map(IndexBuilder.xxhash)
       }
       val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets)).distinct
-      spark.read.parquet(s"$d/segments")
+      IndexPaths.segments(spark, d)
         .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-        .as[SegmentBlock]
     }.reduce(_ union _)
     val slotIdxs = slots.map(tIdx).toArray
     val nDistinct = distinctTerms.size
@@ -668,7 +683,7 @@ object Searcher {
     if (live.isEmpty)
       return spark.emptyDataset[(String, Long, Long)]
         .toDF("term", "df", "cf")
-    val per = live.map(d => spark.read.parquet(s"$d/terms")
+    val per = live.map(d => IndexPaths.terms(spark, d)
       .select($"term", $"df", $"cf"))
     val u = per.reduce(_ union _)
     if (live.size == 1) u
@@ -738,9 +753,8 @@ object Searcher {
       }
       val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets))
         .distinct
-      spark.read.parquet(s"$d/segments")
+      IndexPaths.segments(spark, d)
         .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-        .as[SegmentBlock]
     }.reduce(_ union _)
     blocks.flatMap { b =>
       bcUses.value.get(b.skey).iterator.flatMap { ti =>
@@ -768,7 +782,7 @@ object Searcher {
     val docs = indexDirs
       .filter(d => IndexPaths.readStats(spark, d).numDocs > 0)
       .flatMap { d =>
-        spark.read.parquet(s"$d/docs")
+        IndexPaths.docs(spark, d)
           .filter($"docId".isin(ids: _*))
           .select($"docId", $"url").as[(Long, String)].collect()
       }.toMap

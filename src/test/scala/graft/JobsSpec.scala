@@ -73,6 +73,32 @@ class JobsSpec extends AnyFunSuite {
     assert(segmentFingerprint(dir) == segmentFingerprint(cleanDir))
     assert(spark.read.parquet(s"$dir/docs").count() == 800L)
   }
+
+  test("no task-attempt file appears after a failed build returns") {
+    import spark.implicits._
+    val cfg = IndexBuilder.Config(numBuckets = 4, blockSize = 32, numGroups = 1)
+    val docs = DocIds.fromPages(PagesGen.pages(spark, 800L), 4)
+    // as above: the docs-meta write fails while its siblings run
+    val url = udf { (u: String) =>
+      val st = TaskContext.get.stageId
+      JobsSpec.firstStage.compareAndSet(-1, st)
+      if (st != JobsSpec.firstStage.get && JobsSpec.armed.getAndSet(false))
+        throw new IllegalStateException("injected build failure")
+      u
+    }
+    val failing = docs.withColumn("url", url($"url")).as[graft.index.Doc]
+    val dir = SparkTestSession.tmpDir("graft_jobs_attempts")
+    // every path under dir, task-attempt scratch included
+    def all(): Seq[String] = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .toArray.map(_.toString).sorted.toSeq
+    JobsSpec.firstStage.set(-1)
+    JobsSpec.armed.set(true)
+    intercept[Exception](IndexBuilder.build(failing, dir, cfg))
+    val left = all()
+    Thread.sleep(1000)
+    val late = all().filterNot(left.toSet)
+    assert(late.isEmpty, late.mkString("written after return:\n", "\n", ""))
+  }
 }
 
 object JobsSpec {

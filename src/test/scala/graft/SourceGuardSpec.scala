@@ -7,11 +7,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * literal anywhere else is a second commit protocol growing beside it.
   * Shuffle widths are set through [[Adaptive]] only: a session setting
   * written anywhere else mutates a session other operators share.
+  * Index artifacts are read through [[graft.index.IndexPaths]] only: an
+  * untyped read of one starts a schema-inference job on every call.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
   /** Lines of `src/main/scala` outside `allowedIn` containing a banned string. */
-  private def hits(banned: Seq[String], allowedIn: String): Seq[String] = {
+  private def hits(banned: Seq[String], allowedIn: String): Seq[String] =
+    hitsWhere(allowedIn)(l => banned.exists(l.contains))
+
+  /** Lines of `src/main/scala` outside `allowedIn` that `bad` accepts. */
+  private def hitsWhere(allowedIn: String)(bad: String => Boolean): Seq[String] = {
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), s"run from the repo root")
     java.nio.file.Files.walk(root).toArray
@@ -21,7 +27,7 @@ class SourceGuardSpec extends AnyFunSuite {
       .flatMap { p =>
         val lines = java.nio.file.Files.readAllLines(p).toArray.map(_.toString)
         lines.zipWithIndex.collect {
-          case (l, i) if banned.exists(l.contains) => s"$p:${i + 1}: ${l.trim}"
+          case (l, i) if bad(l) => s"$p:${i + 1}: ${l.trim}"
         }
       }.toSeq
   }
@@ -33,6 +39,12 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("session settings are written only in Adaptive.scala") {
     val found = hits(Seq("conf.set(", "GRAFT_SESS_SHUFFLE"), "Adaptive.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("index artifacts are read only through IndexPaths") {
+    val artifactRead = """read\.parquet\(.*/(segments|terms|docs|tombstones)"""".r
+    val found = hitsWhere("IndexPaths.scala")(artifactRead.findFirstIn(_).nonEmpty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
