@@ -21,8 +21,8 @@ object EntryIndex {
     * silently reuse a stale index.
     */
   private def indexDirFor(spark: SparkSession, dir: String): String =
-    // v10: key via the shared IndexPaths.contentTag helper
-    s"$Root/v10_" + IndexPaths.contentTag(spark, s"$dir/documents.parquet")
+    // v11: norms stride files hold only their docId window
+    s"$Root/v11_" + IndexPaths.contentTag(spark, s"$dir/documents.parquet")
 
   /** Process-level memo of index dirs already verified committed by
     * THIS process: every engine query calls ensure, and re-paying the
@@ -113,8 +113,8 @@ object EntryIndex {
       if (memoHit != null) return memoHit
       val mid = spark.read.parquet(src)
         .agg(max($"doc_id")).head().getLong(0) / 2
-      val base = s"$Root/v10_b${mid}_$tag"
-      val delta = s"$Root/v10_d${mid}_$tag"
+      val base = s"$Root/v11_b${mid}_$tag"
+      val delta = s"$Root/v11_d${mid}_$tag"
       val cfg = IndexBuilder.Config(numBuckets = 8, blockSize = 64,
         numGroups = 2, saltTarget = 300L, withPositions = true)
       def docsFor(pred: org.apache.spark.sql.Column) =
@@ -154,7 +154,7 @@ object EntryIndex {
       val tag = IndexPaths.contentTag(spark, src)
       val memoHit = streamMemo.get(tag)
       if (memoHit != null) return memoHit
-      val root = s"$Root/v10_st_$tag"
+      val root = s"$Root/v11_st_$tag"
       val marker = s"$root/stats.json"
       if (Commit.touch(spark, marker)) {
         val cached = Streaming.listGenerations(spark, root)

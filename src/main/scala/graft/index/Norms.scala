@@ -6,25 +6,35 @@ import org.apache.hadoop.fs.Path
 /** Document-length norms sidecar (SCALE.md: the Lucene-style evolution
   * of storing dl per posting).
   *
-  * Layout: `<gen>/norms/s<strideId>.bin`, one fixed-width 4-byte
-  * big-endian int per docId, `Stride` docIds per file, strideId =
-  * docId >>> StrideLog (GLOBAL stride grid — docIds are dense global
-  * ranks, so a lookup is one seek-free array index after the stride
-  * buffer loads). Slots outside the generation's [minDocId, maxDocId]
-  * stay zero (a docId never appears in postings of a generation that
-  * doesn't own it, so zeros are never read).
+  * Layout: `<gen>/norms/s<strideId>.bin`, strideId = docId >>> StrideLog
+  * (GLOBAL stride grid — docIds are dense global ranks). A file holds
+  * only the window [lo, hi] of the stride's docIds its generation wrote:
+  * an 8-byte header (the int [[Magic]], then lo's offset in the stride)
+  * followed by one 4-byte big-endian dl per docId lo..hi. A lookup is
+  * one array index after the window loads.
+  *
+  * Why the window is exact: docIds are dense, so a generation's docs
+  * fill their window but for zero-token docs, whose slots stay 0 (they
+  * never enter postings, so those zeros are never read). A 55-doc delta
+  * writes 228 bytes, not the 4 MB a padded stride would; the sidecar
+  * grows with docs, not strides.
   *
   * Why a sidecar: dl varbyte in every posting block costs
   * ~1.5 B/posting ≈ 250 TB at the 10^12-doc scale, against 4 B/doc ≈
   * 4 TB as norms (62× less), and posting decode shrinks by a third.
   * A gather task touches only the strides its docId window [lo, hi)
-  * overlaps — at 4 MB per stride file that is (hi−lo)/2^20 files,
-  * bounded by choosing numRanges so windows fit executor memory.
+  * overlaps — (hi−lo)/2^20 files of at most 4 MB each, bounded by
+  * choosing numRanges so windows fit executor memory.
   */
 object Norms {
 
   val StrideLog = 20
   val Stride: Long = 1L << StrideLog
+
+  /** First int of every window file ("NRM1"): a file without it was
+    * not written by this layout. */
+  val Magic = 0x4e524d31
+  val HeaderBytes = 8
 
   def strideOf(docId: Long): Long = docId >>> StrideLog
 
@@ -51,20 +61,22 @@ object Norms {
   /** One generation's routing metadata (broadcast to tasks). */
   case class GenMeta(dir: String, minDocId: Long, maxDocId: Long)
 
+  /** One loaded stride file: `dls(i)` is the dl of docId `lo + i`. */
+  private final class Window(val lo: Long, val dls: Array[Int])
+
   /** Task-local lazy norms reader over several generations: routes a
     * docId to its owning generation (ranges are disjoint), loads that
-    * stride's 4 MB buffer once, then lookups are array reads.
+    * stride's window once, then lookups are array reads.
     */
   final class Reader(gens: Array[GenMeta], conf: SerConf,
                      maxCached: Int = 64) {
-    // access-order LRU: evict ONE cold stride at capacity instead of
-    // clearing all (a task window spanning >maxCached strides
+    // access-order LRU over windows: evict ONE cold window at capacity
+    // instead of clearing all (a task spanning >maxCached strides
     // previously thrashed the whole cache on every overflow)
     private val cache =
-      new java.util.LinkedHashMap[(Int, Long), Array[Byte]](
-        16, 0.75f, true) {
+      new java.util.LinkedHashMap[(Int, Long), Window](16, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(Int, Long), Array[Byte]]): Boolean =
+            e: java.util.Map.Entry[(Int, Long), Window]): Boolean =
           size() > maxCached
       }
 
@@ -82,24 +94,36 @@ object Norms {
         committedChecked(g) = true
       }
 
-    private def load(g: Int, strideId: Long): Array[Byte] = {
+    private def load(g: Int, strideId: Long): Window = {
       val key = (g, strideId)
-      var buf = cache.get(key)
-      if (buf == null) {
-        // bound resident strides (4 MB each): the windowed gather path
-        // touches few, but the probe path has no docId window — an
+      var w = cache.get(key)
+      if (w == null) {
+        // bound resident windows (up to 4 MB each): the windowed gather
+        // path touches few, but the probe path has no docId window — an
         // unbounded cache there could retain GBs per task
         val p = new Path(filePath(gens(g).dir, strideId))
         val fs = p.getFileSystem(conf.value)
         ensureCommitted(g, fs)
+        val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
         val in = fs.open(p)
-        try {
-          buf = new Array[Byte]((Stride * 4).toInt)
-          in.readFully(0L, buf)
-        } finally in.close()
-        cache.put(key, buf)
+        try in.readFully(0L, buf) finally in.close()
+        val bb = java.nio.ByteBuffer.wrap(buf)
+        require(buf.length >= HeaderBytes && bb.getInt(0) == Magic,
+          s"norms file $p has no window header — it predates the " +
+            "windowed layout; rebuild the index")
+        val off = bb.getInt(4)
+        val n = (buf.length - HeaderBytes) / 4
+        require((buf.length - HeaderBytes) % 4 == 0 && off >= 0 &&
+          off + n <= Stride,
+          s"norms file $p: ${buf.length - HeaderBytes} dl bytes at " +
+            s"offset $off do not fit its stride")
+        val dls = new Array[Int](n)
+        bb.position(HeaderBytes)
+        bb.asIntBuffer().get(dls)
+        w = new Window((strideId << StrideLog) + off, dls)
+        cache.put(key, w)
       }
-      buf
+      w
     }
 
     def dl(docId: Long): Long = {
@@ -107,17 +131,20 @@ object Norms {
       while (g < gens.length &&
              (docId < gens(g).minDocId || docId > gens(g).maxDocId)) g += 1
       require(g < gens.length, s"docId $docId outside every generation")
-      val buf = load(g, strideOf(docId))
-      val off = ((docId & (Stride - 1)) * 4).toInt
-      ((buf(off) & 0xffL) << 24) | ((buf(off + 1) & 0xffL) << 16) |
-        ((buf(off + 2) & 0xffL) << 8) | (buf(off + 3) & 0xffL)
+      val w = load(g, strideOf(docId))
+      val i = docId - w.lo
+      // a silent 0 here would inflate BM25, as a missing marker would
+      require(i >= 0 && i < w.dls.length,
+        s"docId $docId outside the norms window [${w.lo}, " +
+          s"${w.lo + w.dls.length}) of ${gens(g).dir}")
+      w.dls(i.toInt).toLong
     }
   }
 
   // Task-scoped Reader reuse: flatMapGroups invokes its function once
   // per GROUP and a partition can hold many groups — a fresh Reader
-  // per group starts with a cold cache and re-reads the same 4 MB
-  // stride files. Keyed by the gens array's identity (one broadcast
+  // per group starts with a cold cache and re-reads the same stride
+  // windows. Keyed by the gens array's identity (one broadcast
   // value per executor), per-thread (Reader is not thread-safe), and
   // dropped at task completion so nothing outlives the task.
   private val taskReaderMaps =
@@ -143,8 +170,9 @@ object Norms {
 
   /** Write the norms files for one generation from its (docId, dl)
     * rows. Distributed: each stride is owned by exactly one task
-    * (groupByKey on strideId), which fills a 4 MB buffer and writes
-    * the file — no driver bottleneck, no cross-task file contention.
+    * (groupByKey on strideId), which writes the window [lo, hi] of the
+    * docIds it received — no driver bottleneck, no cross-task file
+    * contention.
     *
     * Commit protocol ([[graft.Commit.marked]]): the `_complete` marker
     * Reader requires is retracted first and written last, and every
@@ -164,17 +192,25 @@ object Norms {
     graft.Commit.marked(spark, s"$target/norms/_complete") {
       docDl.groupByKey(x => strideOf(x._1))
         .mapGroups { (sid: Long, it: Iterator[(Long, Int)]) =>
-          val buf = new Array[Byte]((Stride * 4).toInt)
+          val offs = Array.newBuilder[Int]
+          val dls = Array.newBuilder[Int]
           it.foreach { case (docId, dl) =>
-            val off = ((docId & (Stride - 1)) * 4).toInt
-            buf(off) = (dl >>> 24).toByte
-            buf(off + 1) = (dl >>> 16).toByte
-            buf(off + 2) = (dl >>> 8).toByte
-            buf(off + 3) = dl.toByte
+            offs += (docId & (Stride - 1)).toInt
+            dls += dl
+          }
+          val (o, d) = (offs.result(), dls.result())
+          val lo = o.min
+          val buf = java.nio.ByteBuffer.allocate(
+            HeaderBytes + 4 * (o.max - lo + 1))
+          buf.putInt(Magic).putInt(lo)
+          var i = 0
+          while (i < o.length) {
+            buf.putInt(HeaderBytes + 4 * (o(i) - lo), d(i))
+            i += 1
           }
           val fin = new Path(filePath(target, sid))
           graft.Commit.file(fin.getFileSystem(bc.value.value), fin)(
-            _.write(buf))
+            _.write(buf.array))
           sid
         }
         .count() // materialize the writes

@@ -216,7 +216,8 @@ object Searcher {
     val bcTomb = spark.sparkContext.broadcast(tombMask)
     val noTomb = tombMask.isEmpty
     // norms-sidecar routing: generation dirs + docId ranges + the
-    // Hadoop conf (tasks open stride files lazily, 4 MB each)
+    // Hadoop conf (tasks open stride files lazily; each holds only its
+    // generation's docId window, 4 B per doc)
     val bcGens = spark.sparkContext.broadcast(
       liveDirs.zip(statsList).map { case (d, st) =>
         graft.index.Norms.GenMeta(d, st.minDocId, st.maxDocId)
@@ -452,7 +453,7 @@ object Searcher {
         val bySkey = it.toSeq.groupBy(x => (x._3, x._5.skey))
         // task-scoped reader: flatMapGroups runs once per GROUP and a
         // partition holds many (query, range) groups — a fresh Reader
-        // per group would re-read the same 4 MB norms strides
+        // per group would re-read the same norms windows
         val norms = graft.index.Norms.taskReader(bcGens.value,
           bcConf.value)
         val cursors = bySkey.map { case ((tIdx, _), rows) =>

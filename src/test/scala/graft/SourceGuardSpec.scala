@@ -9,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * written anywhere else mutates a session other operators share.
   * Index artifacts are read through [[graft.index.IndexPaths]] only: an
   * untyped read of one starts a schema-inference job on every call.
+  * Norms are sized to the generation's docId window: a buffer of a
+  * whole stride (`Stride * 4` bytes) is the 4 MB padding coming back.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -45,6 +47,12 @@ class SourceGuardSpec extends AnyFunSuite {
   test("index artifacts are read only through IndexPaths") {
     val artifactRead = """read\.parquet\(.*/(segments|terms|docs|tombstones)"""".r
     val found = hitsWhere("IndexPaths.scala")(artifactRead.findFirstIn(_).nonEmpty)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("no buffer is sized to a whole norms stride") {
+    val wholeStride = """Stride\s*\*\s*4\b|\b4\s*\*\s*Stride\b""".r
+    val found = hitsWhere(allowedIn = "")(wholeStride.findFirstIn(_).nonEmpty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }
