@@ -155,11 +155,10 @@ object Main {
           // fingerprint the FULL source at delta time so the next
           // delta's probes compare against current state
           graft.index.Incremental.writeFingerprint(pages, deltaDir)
-          // metadata count only — collecting the ids to print a size
+          // manifest count only — collecting the ids to print a size
           // is the O(corpus) driver pull the strided sidecar exists to
           // avoid (a full re-crawl tombstones the whole base)
-          val nTombs = graft.index.Incremental
-            .tombstoneParquetCount(spark, deltaDir)
+          val nTombs = graft.index.Tombstones.count(spark, deltaDir)
           // stats.numDocs IS the fresh-row count (every selected row
           // is indexed) — no separate count() job over the anti-join
           println(s"delta over watermark=$wm: " +
@@ -180,7 +179,7 @@ object Main {
         var docs = 0L; var toks = 0L; var tombs = 0L
         dirs.foreach { d =>
           val st = graft.index.IndexPaths.readStats(spark, d)
-          val nT = graft.index.Incremental.tombstoneParquetCount(spark, d)
+          val nT = graft.index.Tombstones.count(spark, d)
           docs += st.numDocs; toks += st.totalTokens; tombs += nT
           println(f"${d.split('/').last}%-12s docs=${st.numDocs}%-8d " +
             f"terms=${st.numTerms}%-8d docIds=[${st.minDocId}," +

@@ -61,7 +61,7 @@ object Compaction {
     // empty generations (a no-op delta) have no readable docs/segments
     // parquet; they contribute nothing to the merge (their carried
     // tombstones are still unioned in the tail, which reads only
-    // tombstone files)
+    // tombstone sidecars)
     val liveGens = gens.filter(d =>
       IndexPaths.readStats(spark, d).numDocs > 0)
     require(liveGens.nonEmpty, "nothing to compact: every input empty")
@@ -225,8 +225,7 @@ object Compaction {
     // Unconditionally clear stale tombstone outputs first: recompacting
     // into a reused outDir whose previous run carried tombstones would
     // otherwise leave the old files masking live docIds.
-    IndexPaths.delete(spark, s"$outDir/tombstones")
-    IndexPaths.delete(spark, Tombstones.dirOf(outDir))
+    Tombstones.clear(spark, outDir)
     // Tombstones whose target docId was PRESENT in an input generation
     // are consumed (the url dedup physically dropped the replaced
     // version) — but a subset compaction (e.g. delta1+delta2 without
@@ -239,22 +238,14 @@ object Compaction {
     // on a later compaction would wrongly consume tombstones aimed
     // into that hole. Distributed end to end — a full re-crawl's
     // tombstone set is O(corpus), never a driver collect.
-    val tombGens = gens.filter(d =>
-      IndexPaths.exists(spark, s"$d/tombstones"))
+    val tombGens = gens.filter(Tombstones.count(spark, _) > 0)
     if (tombGens.nonEmpty) {
       val inputIds = liveGens.map(d =>
         IndexPaths.docs(spark, d).select($"docId")).reduce(_ union _)
-      val obs = new org.apache.spark.sql.Observation()
-      tombGens.map(IndexPaths.tombstones(spark, _).toDF())
-        .reduce(_ union _).distinct()
+      Tombstones.write(Tombstones.distributed(spark, tombGens)
+        .toDF("docId").distinct()
         .join(inputIds, Seq("docId"), "left_anti")
-        .observe(obs, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/tombstones")
-      // count observed during the write — no re-read job
-      if (obs.get("n").asInstanceOf[Long] == 0L)
-        IndexPaths.delete(spark, s"$outDir/tombstones")
-      else
-        Tombstones.write(IndexPaths.tombstones(spark, outDir), outDir)
+        .as[Long], outDir)
     }
     stats
   }

@@ -2,7 +2,7 @@ package graft.index
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.data.PageRow
@@ -22,8 +22,8 @@ import graft.data.PageRow
   * as N, avgdl, and df move.
   *
   * Re-crawl upsert: a delta MAY contain urls that already exist in a
-  * base generation (`allowRecrawl`). The delta then writes a
-  * `tombstones/` parquet of the replaced base docIds; searchMulti
+  * base generation (`allowRecrawl`). The delta then writes the
+  * replaced base docIds as a [[Tombstones]] sidecar; searchMulti
   * masks them (the dead version is never returned, the new one is),
   * and compaction drops them physically and recomputes term stats —
   * after compaction results are exactly those of a full rebuild over
@@ -35,21 +35,13 @@ import graft.data.PageRow
   */
 object Incremental {
 
-  /** Replaced docIds (tombstones) recorded beside a delta. Driver
-    * collect — callers must gate on [[tombstoneParquetCount]] /
+  /** Replaced docIds (tombstones) recorded beside a generation,
+    * duplicates kept: its strided sidecar read on the driver, no Spark
+    * job. Callers must gate on [[Tombstones.count]] /
     * [[Tombstones.maskFor]] before collecting an unbounded set.
     */
   def readTombstones(spark: SparkSession, indexDir: String): Seq[Long] =
-    if (!IndexPaths.exists(spark, s"$indexDir/tombstones"))
-      Seq.empty
-    else IndexPaths.tombstones(spark, indexDir).collect().toSeq
-
-  /** Tombstone cardinality without collecting ids (parquet metadata
-    * count — no row scan).
-    */
-  def tombstoneParquetCount(spark: SparkSession, indexDir: String): Long =
-    if (!IndexPaths.exists(spark, s"$indexDir/tombstones")) 0L
-    else IndexPaths.tombstones(spark, indexDir).count()
+    Tombstones.ids(spark, indexDir)
 
   /** The base generation's ingestion watermark, persisted beside its
     * stats (written by [[buildDelta]] and [[watermarkOf]] callers).
@@ -264,6 +256,9 @@ object Incremental {
     val spark = pages.sparkSession
     val baseMax = baseDirs.map(d =>
       IndexPaths.readStats(spark, d).maxDocId).max
+    // a reused deltaDir must not keep a previous run's tombstones: a
+    // rebuild without re-crawls would still hide their base docs
+    Tombstones.clear(spark, deltaDir)
     val docs = DocIds.fromPages(pages,
       spark.sessionState.conf.numShufflePartitions,
       useExtractor = useExtractor, offset = baseMax + 1)
@@ -276,16 +271,12 @@ object Incremental {
       // set is O(corpus) — forcing a broadcast here was the round-2
       // OOM hazard; Spark/AQE still broadcasts small deltas on its own
       val deltaUrls = IndexPaths.docs(spark, deltaDir).select(col("url"))
-      baseDirs.map(d => IndexPaths.docs(spark, d)
+      Tombstones.write(baseDirs.map(d => IndexPaths.docs(spark, d)
           .select(col("docId"), col("url")))
         .reduce(_ unionByName _)
         .join(deltaUrls, "url")
         .select(col("docId"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$deltaDir/tombstones")
-      // strided sidecar: lets the serve path mask without ever
-      // collecting the set ([[Tombstones]] switches modes on count)
-      Tombstones.write(IndexPaths.tombstones(spark, deltaDir), deltaDir)
+        .as(Encoders.scalaLong), deltaDir)
     }
     val maxTs = pages.agg(max(col("warc_ts"))).head().getTimestamp(0)
     if (maxTs != null) writeWatermark(spark, deltaDir, maxTs)

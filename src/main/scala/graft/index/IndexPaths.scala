@@ -4,7 +4,6 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Index layout on the (Hadoop-abstracted) filesystem:
   *
@@ -14,8 +13,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *   <dir>/postings_staged/       StagedPosting parquet, partitionBy(bucket)
   *   <dir>/segments/              SegmentBlock parquet, partitionBy(bucket),
   *                                sorted by (termHash, skey, blockId)
-  *   <dir>/tombstones/            docId parquet of replaced versions
-  *                                (re-crawl deltas only)
+  *   <dir>/tombstones_strided/    replaced docIds, one sorted-long file
+  *                                per docId stride + manifest.json
+  *                                (re-crawl deltas, carrying compactions;
+  *                                see [[Tombstones]])
   *   <dir>/stats.json             IndexStats sidecar
   *   <dir>/_checkpoints/          one JSON per (stage, unit)
   * }}}
@@ -46,11 +47,6 @@ object IndexPaths {
 
   def docs(spark: SparkSession, dir: String): Dataset[DocMeta] =
     typed(spark, s"$dir/docs", Encoders.product[DocMeta])
-
-  /** Tombstoned docIds, one `docId` column. */
-  def tombstones(spark: SparkSession, dir: String): Dataset[Long] =
-    spark.read.schema(StructType(Seq(StructField("docId", LongType))))
-      .parquet(s"$dir/tombstones").as(Encoders.scalaLong)
 
   private def typed[T](spark: SparkSession, path: String,
                        enc: Encoder[T]): Dataset[T] =

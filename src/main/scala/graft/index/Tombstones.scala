@@ -2,38 +2,38 @@ package graft.index
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** Strided tombstone sidecar + the serve-path mask.
+/** Re-crawl tombstones: the one at-rest form and its one reader.
   *
-  * Every re-crawl delta commits its tombstoned docIds twice: as
-  * `tombstones/` parquet (the table compaction and tools read) and as
-  * a strided sidecar on the [[Norms]] stride grid, the Lucene-deletes
-  * shape: `<gen>/tombstones_strided/s<strideId>.bin` holds the SORTED
+  * A re-crawl delta (or a compaction carrying tombstones aimed at a
+  * generation it excluded) records the replaced docIds as a strided
+  * sidecar on the [[Norms]] stride grid, the Lucene-deletes shape:
+  * `<gen>/tombstones_strided/s<strideId>.bin` holds the SORTED
   * tombstoned docIds of that docId stride as raw big-endian longs, and
-  * `manifest.json` lists the count and the stride ids. The serve path
-  * reads the sidecar, never the parquet, so building a mask starts no
-  * Spark job:
-  *  - at most [[broadcastThreshold]] tombstones in total: the driver
-  *    reads every listed stride file into one broadcast hash set
-  *    ([[SetMask]]) — O(1) per-posting checks; the threshold bounds
+  * `manifest.json` lists the count and the stride ids. Every consumer
+  * reads it through this object:
+  *  - [[count]] and [[ids]]: the manifest / the stride files on the
+  *    driver, no Spark job (CLI counts, tests, benchmarks);
+  *  - [[maskFor]] at most [[broadcastThreshold]] tombstones in total:
+  *    the driver reads every listed stride file into one broadcast hash
+  *    set ([[SetMask]]) — O(1) per-posting checks; the threshold bounds
   *    the read;
   *  - above it: [[StridedMask]] — a gather task loads only the strides
   *    its docId window [lo, hi) overlaps, so per-task memory is the
   *    range's own tombstones, never the corpus's (collecting a full
   *    re-crawl's O(corpus) set into a driver Set is the OOM the
-  *    round-2 advice flagged).
-  * Only a generation with tombstone parquet but no committed manifest
-  * (legacy, or a crash before the sidecar was written) is read from
-  * the parquet, and only while small. Exactness holds in every mode
-  * (hash/binary-search membership, no bloom false positives — a false
-  * positive would silently drop a live doc from rankings).
+  *    round-2 advice flagged);
+  *  - [[distributed]]: one task per stride file, for compaction.
+  * Exactness holds in every mode (hash/binary-search membership, no
+  * bloom false positives — a false positive would silently drop a live
+  * doc from rankings).
   *
   * Commit protocol ([[graft.Commit.marked]]): stride files replace
   * atomically; `manifest.json` (count + stride list) is written LAST
-  * by the driver and is the commit marker — readers that find
-  * tombstone parquet but no manifest fall back to the parquet, never
-  * to a half-written sidecar.
+  * by the driver and is the commit marker — no manifest means no
+  * tombstones, never a half-written sidecar. A generation holding the
+  * retired `tombstones/` parquet but no manifest is refused: read as
+  * "no tombstones" it would silently resurface replaced docs.
   */
 object Tombstones {
 
@@ -50,6 +50,18 @@ object Tombstones {
   def broadcastThreshold(spark: SparkSession): Long =
     spark.conf.getOption("graft.tombstones.broadcastThreshold")
       .map(_.toLong).getOrElse(DefaultBroadcastThreshold)
+
+  /** The retired parquet form, kept only to refuse and to clear it. */
+  private def legacyDirOf(indexDir: String): String = s"$indexDir/tombstones"
+
+  /** Remove a generation's tombstones, sidecar and any retired parquet:
+    * a writer into a reused dir clears first, or the previous run's
+    * tombstones would keep masking live docIds.
+    */
+  def clear(spark: SparkSession, indexDir: String): Unit = {
+    IndexPaths.delete(spark, dirOf(indexDir))
+    IndexPaths.delete(spark, legacyDirOf(indexDir))
+  }
 
   /** Write the strided sidecar for one generation from its tombstoned
     * docIds. Distributed: each stride is owned by one task (groupByKey
@@ -95,8 +107,13 @@ object Tombstones {
   def readManifest(spark: SparkSession,
                    indexDir: String): Option[(Long, Array[Long])] = {
     val p = s"${dirOf(indexDir)}/manifest.json"
-    if (!IndexPaths.exists(spark, p)) None
-    else IndexPaths.readString(spark, p).trim match {
+    if (!IndexPaths.exists(spark, p)) {
+      if (IndexPaths.exists(spark, legacyDirOf(indexDir)))
+        throw new IllegalStateException(
+          s"$indexDir has tombstone parquet but no committed sidecar — " +
+            "rebuild it or rerun Tombstones.write")
+      None
+    } else IndexPaths.readString(spark, p).trim match {
       case ManifestRx(count, strides) =>
         Some((count.toLong, strides.split(",").map(_.trim)
           .filter(_.nonEmpty).map(_.toLong)))
@@ -104,6 +121,38 @@ object Tombstones {
         throw new IllegalStateException(
           s"unparseable tombstone manifest $p: '$torn' — rerun Tombstones.write")
     }
+  }
+
+  /** A generation's tombstone count, from its manifest (0 without
+    * one). No Spark job. */
+  def count(spark: SparkSession, indexDir: String): Long =
+    readManifest(spark, indexDir).fold(0L)(_._1)
+
+  /** Every tombstoned docId of a generation, duplicates kept, read
+    * from its committed stride files on the driver (no Spark job). The
+    * caller bounds the set: see [[count]].
+    */
+  def ids(spark: SparkSession, indexDir: String): Seq[Long] =
+    readManifest(spark, indexDir).fold(Seq.empty[Long])(m =>
+      idsOf(spark.sparkContext.hadoopConfiguration, indexDir, m._2))
+
+  private def idsOf(conf: org.apache.hadoop.conf.Configuration,
+                    indexDir: String, strides: Array[Long]): Seq[Long] =
+    strides.toSeq.flatMap(readStride(conf, indexDir, _))
+
+  /** The tombstoned docIds of `indexDirs`, duplicates kept, read on
+    * executors: the manifests list the stride files, one task reads
+    * each, and nothing is collected on the driver (a full re-crawl's
+    * set is O(corpus)).
+    */
+  def distributed(spark: SparkSession, indexDirs: Seq[String]): Dataset[Long] = {
+    import spark.implicits._
+    val files = indexDirs.flatMap(d =>
+      readManifest(spark, d).toSeq.flatMap(_._2.map(d -> _)))
+    val bc = spark.sparkContext.broadcast(
+      new Norms.SerConf(spark.sparkContext.hadoopConfiguration))
+    files.toDS().flatMap { case (d, sid) =>
+      readStride(bc.value.value, d, sid).iterator }
   }
 
   /** One committed stride file: its sorted docIds. */
@@ -213,68 +262,18 @@ object Tombstones {
 
   /** Build the mask for a set of generations: manifest counts decide
     * broadcast-Set vs strided; below the threshold the Set is read from
-    * the committed stride files on the driver (no Spark job). Only
-    * generations without a committed sidecar read their (small,
-    * pre-sidecar) tombstone parquet.
+    * the committed stride files on the driver (no Spark job).
     */
   def maskFor(spark: SparkSession, indexDirs: Seq[String]): Mask = {
-    val thr = broadcastThreshold(spark)
-    val manifests = indexDirs.map(d => d -> readManifest(spark, d))
-    val parquetCounts = manifests.collect {
-      case (d, None) => d -> Incremental.tombstoneParquetCount(spark, d)
-    }.toMap
-    val total = manifests.map {
-      case (_, Some((n, _))) => n
-      case (d, None) => parquetCounts(d)
-    }.sum
+    val manifests = indexDirs.flatMap(d =>
+      readManifest(spark, d).filter(_._1 > 0).map(m => (d, m._1, m._2)))
+    val total = manifests.map(_._2).sum
     if (total == 0) EmptyMask
-    else if (total <= thr) {
+    else if (total <= broadcastThreshold(spark)) {
       val conf = spark.sparkContext.hadoopConfiguration
-      SetMask(manifests.flatMap {
-        case (d, Some((_, strides))) => strides.flatMap(readStride(conf, d, _)).toSeq
-        case (d, None) => Incremental.readTombstones(spark, d)
-      }.toSet)
+      SetMask(manifests.flatMap { case (d, _, ss) => idsOf(conf, d, ss) }.toSet)
     }
-    else {
-      // strided for every generation that committed a sidecar; a
-      // legacy generation without one contributes through a small
-      // parquet set folded in as extra "strides"? No — keep exact and
-      // simple: require the sidecar where it matters. A generation
-      // over threshold always has one (buildDelta writes it); legacy
-      // small generations ride along as a SetMask union.
-      val strided = manifests.collect {
-        case (d, Some((n, ss))) if n > 0 => (d, ss)
-      }.toArray
-      // a manifest-less generation rides along as a broadcast Set ONLY
-      // if its own count is under the threshold — collecting a large
-      // set here (e.g. a full-re-crawl delta that died before its
-      // sidecar committed) would silently recreate the O(corpus)
-      // driver Set this whole mechanism exists to prevent
-      manifests.foreach {
-        case (d, None) =>
-          val c = parquetCounts(d)
-          require(c <= thr,
-            s"$d has $c tombstones but no committed strided sidecar " +
-              s"(> broadcast threshold $thr) — rerun Tombstones.write " +
-              "for it before serving")
-        case _ => ()
-      }
-      val legacySmall = manifests.collect {
-        case (d, None) => d
-      }.flatMap(d => Incremental.readTombstones(spark, d)).toSet
-      val conf = new Norms.SerConf(spark.sparkContext.hadoopConfiguration)
-      if (legacySmall.isEmpty) StridedMask(strided, conf)
-      else CombinedMask(StridedMask(strided, conf), SetMask(legacySmall))
-    }
-  }
-
-  final case class CombinedMask(a: Mask, b: Mask) extends Mask {
-    def isEmpty: Boolean = a.isEmpty && b.isEmpty
-    def fn: Long => Boolean = {
-      val fa = a.fn; val fb = b.fn
-      if (fa == null) fb
-      else if (fb == null) fa
-      else (d: Long) => fa(d) || fb(d)
-    }
+    else StridedMask(manifests.map { case (d, _, ss) => (d, ss) }.toArray,
+      new Norms.SerConf(spark.sparkContext.hadoopConfiguration))
   }
 }

@@ -11,6 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * untyped read of one starts a schema-inference job on every call.
   * Norms are sized to the generation's docId window: a buffer of a
   * whole stride (`Stride * 4` bytes) is the 4 MB padding coming back.
+  * Tombstones rest in one form, the strided sidecar: a `tombstones/`
+  * parquet path outside [[graft.index.Tombstones]] (which refuses the
+  * retired form) is the second copy coming back.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -47,6 +50,11 @@ class SourceGuardSpec extends AnyFunSuite {
   test("index artifacts are read only through IndexPaths") {
     val artifactRead = """read\.parquet\(.*/(segments|terms|docs|tombstones)"""".r
     val found = hitsWhere("IndexPaths.scala")(artifactRead.findFirstIn(_).nonEmpty)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("tombstone parquet paths appear only in Tombstones.scala") {
+    val found = hits(Seq("/tombstones\""), "Tombstones.scala")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

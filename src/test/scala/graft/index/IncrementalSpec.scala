@@ -123,11 +123,8 @@ class IncrementalSpec extends AnyFunSuite {
     // tombstoned base versions never surface from termDocs
     val victimIds = Searcher.termDocs(spark, Seq(baseDir, deltaDir),
       Seq("term000000")).select("doc_id").as[Long].head(2).toSeq
-    // the full tombstone protocol (buildDelta's): parquet first, then
-    // the strided sidecar + manifest — maskFor's small-set path reads
-    // the parquet
-    victimIds.toDF("docId").write.mode("overwrite")
-      .parquet(s"$deltaDir/tombstones")
+    // the tombstone protocol (buildDelta's): the strided sidecar, its
+    // manifest last — maskFor's small-set path reads the stride files
     Tombstones.write(victimIds.toDS(), deltaDir)
     val after = Searcher.termDocs(spark, Seq(baseDir, deltaDir),
       Seq("term000000")).select("doc_id").as[Long].collect().toSet
@@ -290,6 +287,65 @@ class IncrementalSpec extends AnyFunSuite {
       baseOnly.map(h => (h.queryId, h.rank, h.docId)).sorted.toSeq)
   }
 
+  /** A 200-page base, 20 fresh pages and 5 re-crawled base pages. */
+  private def recrawlBase(name: String) = {
+    import spark.implicits._
+    val basePages = (0L until 200L).map(PagesGen.row(42L, _))
+    val baseDir = SparkTestSession.tmpDir(s"graft_${name}_base")
+    IndexBuilder.build(DocIds.fromPages(basePages.toDS(), 4), baseDir, cfg, "base")
+    val fresh = (0 until 20).map(i => PagesGen.row(99L, 5000L + i))
+    val recrawled = basePages.take(5).map(p => p.copy(text = p.text + " zzagain",
+      warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L)))
+    (baseDir, fresh, recrawled)
+  }
+
+  test("a delta rebuilt into its dir without re-crawls serves the first run's victims again") {
+    import spark.implicits._
+    val (baseDir, fresh, recrawled) = recrawlBase("stale")
+    val deltaDir = SparkTestSession.tmpDir("graft_stale_delta")
+    Incremental.buildDelta((fresh ++ recrawled).toDS(), Seq(baseDir), deltaDir,
+      cfg, useExtractor = false, allowRecrawl = true)
+    val victims = Incremental.readTombstones(spark, deltaDir).toSet
+    assert(victims.size == recrawled.size)
+    Incremental.buildDelta(fresh.toDS(), Seq(baseDir), deltaDir, cfg,
+      useExtractor = false)
+    assert(Tombstones.maskFor(spark, Seq(baseDir, deltaDir)).isEmpty,
+      "the rebuilt delta kept its previous run's tombstones")
+    val terms = recrawled.map(p => graft.functions.Tokenize.tokens(p.text).head)
+    val served = Searcher.termDocs(spark, Seq(baseDir, deltaDir), terms.distinct)
+      .select("doc_id").as[Long].collect().toSet
+    assert(victims.subsetOf(served), s"victims ${victims -- served} still hidden")
+  }
+
+  test("a delta whose sidecar never committed reruns to a clean run's sidecar") {
+    import spark.implicits._
+    val (baseDir, fresh, recrawled) = recrawlBase("crash")
+    val pages = (fresh ++ recrawled).toDS()
+    val cleanDir = SparkTestSession.tmpDir("graft_crash_clean")
+    Incremental.buildDelta(pages, Seq(baseDir), cleanDir, cfg,
+      useExtractor = false, allowRecrawl = true)
+    // the on-disk state of a crash between the build and the sidecar
+    val crashDir = SparkTestSession.tmpDir("graft_crash_rerun")
+    Incremental.buildDelta(pages, Seq(baseDir), crashDir, cfg,
+      useExtractor = false)
+    assert(Tombstones.readManifest(spark, crashDir).isEmpty)
+    Incremental.buildDelta(pages, Seq(baseDir), crashDir, cfg,
+      useExtractor = false, allowRecrawl = true)
+    def sidecar(dir: String): Map[String, Seq[Byte]] = {
+      val d = new java.io.File(Tombstones.dirOf(dir))
+      d.listFiles().filterNot(_.getName.startsWith(".")).map(f =>
+        f.getName -> java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
+    }
+    assert(sidecar(cleanDir).size > 1)
+    assert(sidecar(crashDir) == sidecar(cleanDir))
+    def maskSet(dir: String) = Tombstones.maskFor(spark, Seq(baseDir, dir)) match {
+      case Tombstones.SetMask(ids) => ids
+      case other => fail(s"expected a SetMask, got $other")
+    }
+    assert(maskSet(crashDir) == maskSet(cleanDir))
+    assert(maskSet(cleanDir).size == recrawled.size)
+  }
+
   test("strided tombstone mask: multi-stride membership + rank identity") {
     import spark.implicits._
     // 1. membership mechanics across stride boundaries: ids straddle
@@ -318,8 +374,6 @@ class IncrementalSpec extends AnyFunSuite {
     IndexBuilder.build(DocIds.fromPages(pages, 4),
       dir, cfg.copy(withPositions = true), "tomb")
     val tombIds = (0L until 400L).filter(_ % 3 == 0)
-    tombIds.toDF("docId").write.mode("overwrite")
-      .parquet(s"$dir/tombstones")
     Tombstones.write(tombIds.toDS(), dir)
     val qs = QuerySet.queries().take(12)
     def run(mode: Searcher.Mode = Searcher.Or,

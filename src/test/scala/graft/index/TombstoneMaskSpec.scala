@@ -8,7 +8,9 @@ import graft.query.{QuerySpec, Searcher, ServeJobsSpec}
 
 /** The serve-path tombstone mask below the broadcast threshold is read
   * from the committed strided sidecar on the driver, and equals the
-  * tombstone parquet it was written from.
+  * tombstoned docIds `buildDelta` wrote. The sidecar is the only
+  * at-rest form: a generation holding the retired parquet form but no
+  * manifest is refused.
   */
 class TombstoneMaskSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -27,15 +29,25 @@ class TombstoneMaskSpec extends AnyFunSuite {
     assert(setOf(mask) == rows.toSet && rows.toSet == f.dead)
   }
 
-  test("a generation without a manifest falls back to its parquet") {
+  test("readTombstones and the manifest count start no Spark job") {
+    val f = ServeJobsSpec.fixture(spark)
+    val ((rows, counts), jobs) = ServeJobsSpec.jobsOf(spark)(
+      (f.dirs.flatMap(Incremental.readTombstones(spark, _)),
+        f.dirs.map(Tombstones.count(spark, _))))
+    assert(jobs.isEmpty, s"tombstone readers started jobs: $jobs")
+    assert(counts.sum == rows.size && rows.toSet == f.dead)
+  }
+
+  test("a generation with tombstone parquet but no manifest is refused") {
     import spark.implicits._
     val legacy = SparkTestSession.tmpDir("graft_mask_legacy")
     Seq(5L, 9L).toDF("docId").write.parquet(s"$legacy/tombstones")
-    val sidecarOnly = SparkTestSession.tmpDir("graft_mask_sidecar")
-    Tombstones.write(Seq(3L, (1L << 20) + 4).toDS(), sidecarOnly)
-    assert(setOf(Tombstones.maskFor(spark, Seq(legacy))) == Set(5L, 9L))
-    assert(setOf(Tombstones.maskFor(spark, Seq(legacy, sidecarOnly))) ==
-      Set(5L, 9L, 3L, (1L << 20) + 4))
+    Seq[() => Any](() => Tombstones.maskFor(spark, Seq(legacy)),
+      () => Incremental.readTombstones(spark, legacy),
+      () => Tombstones.count(spark, legacy)).foreach { read =>
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains("Tombstones.write"))
+    }
   }
 
   test("a torn manifest still throws, parquet present or not") {
@@ -56,10 +68,7 @@ class TombstoneMaskSpec extends AnyFunSuite {
     val q = Seq(QuerySpec(0L, "term000002 term000007"))
     def top() = Searcher.searchMulti(spark, Seq(dir), q, 10, numRanges = 4)
       .collect().sortBy(_.rank).map(_.docId).toSeq
-    def tombstone(ids: Seq[Long]): Unit = {
-      ids.toDF("docId").write.mode("overwrite").parquet(s"$dir/tombstones")
-      Tombstones.write(ids.toDS(), dir)
-    }
+    def tombstone(ids: Seq[Long]): Unit = Tombstones.write(ids.toDS(), dir)
     val open = top()
     val (a, b) = (open.take(3), open.slice(3, 6))
     tombstone(a)
