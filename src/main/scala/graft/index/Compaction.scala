@@ -9,11 +9,14 @@ import org.apache.spark.sql.functions._
   * blocks, re-crawled urls are deduplicated (the NEWEST generation's
   * version wins, matching the reference's insert-or-update re-crawl,
   * /root/reference/packages/core/spheraform_core/tasks/crawl.py:190-254),
-  * per-term df/cf/maxTf/minDl are recomputed exactly from the
-  * SURVIVING postings, hot terms re-salted under the merged df, and
-  * the standard merge-by-term encode runs. Surviving docIds are
-  * preserved, so compacted results are identical to a full rebuild
-  * over the post-replacement corpus — scores AND docIds.
+  * and the surviving docs and postings go through the one generation
+  * writer ([[Generation.write]]) like a build's: per-term
+  * df/cf/maxTf/minDl recomputed exactly from the SURVIVING postings,
+  * hot terms re-salted under the merged df, the standard merge-by-term
+  * encode. Surviving docIds are preserved, so compacted results are
+  * identical to a full rebuild over the post-replacement corpus —
+  * scores AND docIds. What is compaction's own: the url upsert, the
+  * decode, and the watermark, fingerprint and tombstone carry.
   *
   * Ancestor: the reference's landing-zone promote step
   * (/root/reference/packages/core/spheraform_core/storage/backend.py:473-535) —
@@ -22,42 +25,19 @@ import org.apache.spark.sql.functions._
 object Compaction {
 
   /** `resume = true` mirrors the build's checkpoint semantics: the
-    * docs/terms/stats front half commits as one "stats" checkpoint,
-    * and segments encode in `cfg.numGroups` bucket groups with one
-    * checkpoint each — a 100 TB compaction that dies mid-encode
-    * restarts at the first incomplete group, not from zero. Group
-    * inputs re-derive deterministically from the durable outputs
-    * (outDir/docs + outDir/terms + the source generations), so a
-    * resumed compaction is byte-identical to an uninterrupted one
-    * (ResumeSpec asserts it).
+    * docs/norms/terms/stats front half commits as one "stats"
+    * checkpoint, and segments encode in `cfg.numGroups` bucket groups
+    * with one checkpoint each — a 100 TB compaction that dies
+    * mid-encode restarts at the first incomplete group, not from zero.
+    * Group inputs re-derive deterministically from the source
+    * generations and the committed dictionary, so a resumed compaction
+    * is byte-identical to an uninterrupted one (ResumeSpec asserts it).
     */
   def compact(spark: SparkSession, gens: Seq[String], outDir: String,
               cfg: IndexBuilder.Config = IndexBuilder.Config(),
               buildId: String = "compact",
               resume: Boolean = true): IndexStats = {
     import spark.implicits._
-    val ckpt = new CheckpointStore(spark, outDir)
-    val t0 = System.currentTimeMillis()
-    // lineage = inputs + every config knob the artifacts depend on: a
-    // resume must never trust checkpoints from a run over different
-    // generations (delta2 silently missing, its tombstones wrongly
-    // dropped as in-range) or a different bucket/group layout (group
-    // checkpoints would gate the wrong bucket ranges)
-    val lineage = gens.mkString(",") +
-      s";b=${cfg.numBuckets};g=${cfg.numGroups};bs=${cfg.blockSize}" +
-      s";st=${cfg.saltTarget};pos=${cfg.withPositions}"
-    val shufP =
-      if (cfg.shufflePartitions > 0) cfg.shufflePartitions
-      else spark.sessionState.conf.numShufflePartitions
-    if (!resume) {
-      IndexPaths.delete(spark, s"$outDir/_checkpoints")
-      IndexPaths.delete(spark, s"$outDir/segments")
-    } else if (ckpt.invalidateUnlessLineage(lineage)) {
-      // reused outDir, different inputs/config: segments were encoded
-      // under the old lineage's stage boundaries — discard them too
-      IndexPaths.delete(spark, s"$outDir/segments")
-    }
-
     // empty generations (a no-op delta) have no readable docs/segments
     // parquet; they contribute nothing to the merge (their carried
     // tombstones are still unioned in the tail, which reads only
@@ -66,141 +46,44 @@ object Compaction {
       IndexPaths.readStats(spark, d).numDocs > 0)
     require(liveGens.nonEmpty, "nothing to compact: every input empty")
 
-    val statsDone = resume && ckpt.isComplete("stats", 0)
-    if (!statsDone) {
-      // fresh front half invalidates any previously encoded segments
-      IndexPaths.delete(spark, s"$outDir/segments")
-
-      // 1. docs meta: per url, the row from the LATEST generation wins
-      //    (re-crawl upsert); losers' docIds drop out of everything
-      val docsAll = liveGens.zipWithIndex.map { case (d, i) =>
+    // 1. docs meta: per url, the row from the LATEST generation wins
+    //    (re-crawl upsert); losers' docIds drop out of everything
+    val winners = liveGens.zipWithIndex.map { case (d, i) =>
         IndexPaths.docs(spark, d).withColumn("gen", lit(i))
       }.reduce(_ unionByName _)
-      val ranked = docsAll.withColumn("rn",
-        row_number().over(Window.partitionBy($"url").orderBy(desc("gen"),
-          desc("docId"))))
-      val winners = ranked.filter($"rn" === 1).drop("rn", "gen")
-      winners.repartitionByRange(math.max(1, shufP / 2), $"docId")
-        .sortWithinPartitions("docId")
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-    }
-    val written = IndexPaths.docs(spark, outDir).toDF()
-    // 2. postings: decoded once, shared by the terms agg and every
-    //    segments group. Cache-vs-recompute is a CONFIG
+      .withColumn("rn", row_number().over(Window.partitionBy($"url")
+        .orderBy(desc("gen"), desc("docId"))))
+      .filter($"rn" === 1).drop("rn", "gen")
+      .as[DocMeta]
+    // positional tier survives the merge for docs that had one: any
+    // positional input gen → the output can phrase-match (docs from
+    // non-positional gens just can't — documented partial semantics,
+    // IncrementalSpec's mixed case); all-absent → false; any
+    // legacy-unknown (and none true) → unknown
+    val genPos = gens.map(d => IndexPaths.readStats(spark, d).positions)
+    val posFlag =
+      if (genPos.exists(_.contains(true))) Some(true)
+      else if (genPos.forall(_.contains(false))) Some(false)
+      else None
+    // 2. postings: decoded once, shared by the terms, the norms and
+    //    every segments group. Cache-vs-recompute is a CONFIG
     //    (`graft.compaction.cacheDecoded`, default true): the cache is
     //    a corpus-scale disk-backed store for the run's lifetime
     //    (spills rather than OOMs) bought to decode each block once
-    //    across 1 + numGroups consumers; a storage-constrained
-    //    deployment sets false and re-decodes per consumer instead —
-    //    byte-identical output either way (ResumeSpec asserts).
+    //    across its readers; a storage-constrained deployment sets
+    //    false and re-decodes per reader instead — byte-identical
+    //    output either way (ResumeSpec asserts).
+    val decoded = decodedPostings(spark, liveGens, winners.toDF())
     val cacheDecoded = spark.conf
       .getOption("graft.compaction.cacheDecoded").forall(_.toBoolean)
-    val decoded = {
-      val d = decodedPostings(spark, liveGens, written)
-      if (cacheDecoded)
-        d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else d
-    }
-    if (!statsDone) {
-      val agg0 = written.agg(count(lit(1)), sum($"dl".cast("long")),
-        max($"docId"), max($"dl".cast("long")), min($"docId")).head()
-      val n = agg0.getLong(0)
-      val totalTokens = agg0.getLong(1)
-      val avgdl = if (n == 0) 0.0 else totalTokens.toDouble / n
-      val maxDl = if (n == 0) 0L else agg0.getLong(3)
-      val minDocId = if (n == 0) 0L else agg0.getLong(4)
-      Norms.write(written.select($"docId", $"dl".cast("int"))
-        .as[(Long, Int)], outDir)
-
-      // 3. terms: recomputed EXACTLY from the surviving postings (a
-      //    metadata re-sum would overcount df/cf once a doc is
-      //    dropped); re-salt under the merged df
-      val termDf = decoded.groupBy($"term")
-        .agg(count(lit(1)).as("df"), sum($"tf").cast("long").as("cf"),
-          max($"tf").cast("int").as("maxTf"),
-          min($"dl").cast("int").as("minDl"))
-        .withColumn("saltCount",
-          when($"df" > cfg.saltTarget,
-            ceil($"df".cast("double") / cfg.saltTarget).cast("int"))
-            .otherwise(lit(1)))
-      val termsParts = math.max(1,
-        Integer.highestOneBit(math.max(1, shufP / 4)))
-      // term count observed during the write — a re-read for count()
-      // is a full extra pass over the dictionary
-      val obsTerms = new org.apache.spark.sql.Observation()
-      termDf
-        .withColumn("termHash", xxhash64($"term"))
-        .select($"term", $"termHash", $"df", $"cf", $"saltCount",
-          $"maxTf", $"minDl")
-        .repartition(termsParts,
-          IndexBuilder.rangePid(col("termHash"), termsParts))
-        .sortWithinPartitions("termHash")
-        .observe(obsTerms, count(lit(1)).as("n"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
-      val numTerms = obsTerms.get("n").asInstanceOf[Long]
-      // positional tier survives the merge for docs that had one:
-      // any positional input gen → the output can phrase-match (docs
-      // from non-positional gens just can't — documented partial
-      // semantics, IncrementalSpec's mixed case); all-absent → false;
-      // any legacy-unknown (and none true) → unknown
-      val genPos = gens.map(d => IndexPaths.readStats(spark, d).positions)
-      val posFlag =
-        if (genPos.exists(_.contains(true))) Some(true)
-        else if (genPos.forall(_.contains(false))) Some(false)
-        else None
-      val stats = IndexStats(buildId, n, avgdl, numTerms, cfg.numBuckets,
-        cfg.blockSize, agg0.getLong(2), totalTokens, maxDl, minDocId,
-        positions = posFlag)
-      IndexPaths.writeStats(spark, outDir, stats)
-      ckpt.commit(Checkpoint(buildId, "stats", 0, "COMPLETE", n,
-        IndexPaths.dirBytes(spark, s"$outDir/docs"), lineage, t0,
-        System.currentTimeMillis()))
-    }
-
-    // 4. re-key, merge-encode — one checkpointed bucket group at a
-    //    time (mirrors IndexBuilder's segments stage)
-    val stats = IndexPaths.readStats(spark, outDir)
-    val termsRead = IndexPaths.terms(spark, outDir)
-    // the ONE bucket expression (IndexBuilder.rangePid): build and
-    // compaction must agree on the layout or pruning breaks
-    val bucketCol = IndexBuilder.rangePid(col("termHash"), cfg.numBuckets)
-    val staged = decoded
-      .join(broadcast(termsRead.filter($"saltCount" > 1)
-        .select($"term", $"saltCount")), Seq("term"), "left")
-      .withColumn("skey",
-        when($"saltCount".isNotNull && $"saltCount" > 1,
-          concat($"term", lit("#"),
-            pmod(xxhash64($"docId"), $"saltCount".cast("long"))))
-          .otherwise($"term"))
-      .withColumn("termHash", xxhash64($"skey"))
-      .withColumn("bucket", bucketCol)
-      .select($"bucket", $"termHash", $"skey",
-        $"docId", $"tf", $"dl", $"posEnc")
-      .as[StagedPosting]
-    val bucketsPerGroup =
-      math.max(1, math.ceil(cfg.numBuckets.toDouble / cfg.numGroups).toInt)
-    for (g <- 0 until cfg.numGroups) {
-      val lo = g * bucketsPerGroup
-      val hi = math.min(cfg.numBuckets, lo + bucketsPerGroup)
-      if (lo < hi && !(resume && ckpt.isComplete("segments", g))) {
-        val tg = System.currentTimeMillis()
-        // clean any partial output of a previous attempt of THIS group
-        (lo until hi).foreach { b =>
-          IndexPaths.delete(spark, s"$outDir/segments/bucket=$b")
-        }
-        IndexBuilder.encodeSegments(
-            staged.filter($"bucket" >= lo && $"bucket" < hi), stats, cfg)
-          .write.mode(SaveMode.Append).partitionBy("bucket")
-          .parquet(s"$outDir/segments")
-        val bytes = (lo until hi).map(b =>
-          IndexPaths.dirBytes(spark, s"$outDir/segments/bucket=$b")).sum
-        ckpt.commit(Checkpoint(buildId, "segments", g, "COMPLETE", 0L,
-          bytes, lineage, tg, System.currentTimeMillis()))
-        if (cfg.failAfterGroup == g)
-          throw new RuntimeException(s"injected failure after group $g")
-      }
-    }
-    if (cacheDecoded) decoded.unpersist()
+    if (cacheDecoded)
+      decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // lineage = the inputs: a resume must never trust checkpoints from
+    // a run over different generations (delta2 silently missing, its
+    // tombstones wrongly dropped as in-range)
+    val stats = try Generation.write(outDir, winners, decoded, cfg, buildId,
+        resume, gens.mkString(","), posFlag, stage = false)
+      finally if (cacheDecoded) decoded.unpersist()
     // carry the newest watermark forward
     gens.flatMap(d => Incremental.readWatermark(spark, d))
       .sortBy(_.getTime).lastOption
@@ -259,7 +142,7 @@ object Compaction {
     * sidecar).
     */
   private def decodedPostings(spark: SparkSession, gens: Seq[String],
-      written: org.apache.spark.sql.DataFrame)
+      winners: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import spark.implicits._
     gens.map(IndexPaths.segments(spark, _))
@@ -277,6 +160,6 @@ object Compaction {
             if (pos == null) Array.emptyByteArray else pos(i)))
       }
       .toDF("term", "docId", "tf", "posEnc")
-      .join(written.select($"docId", $"dl".cast("int").as("dl")), "docId")
+      .join(winners.select($"docId", $"dl".cast("int").as("dl")), "docId")
   }
 }

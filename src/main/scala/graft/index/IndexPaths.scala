@@ -5,12 +5,16 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
-/** Index layout on the (Hadoop-abstracted) filesystem:
+/** Index layout on the (Hadoop-abstracted) filesystem. Everything but
+  * the tombstones is written by the one generation writer,
+  * [[Generation.write]]:
   *
   * {{{
   *   <dir>/docs/                  DocMeta parquet, range-sorted by docId
+  *   <dir>/norms/                 dl per docId window ([[Norms]])
   *   <dir>/terms/                 TermMeta parquet, range-sorted by termHash
   *   <dir>/postings_staged/       StagedPosting parquet, partitionBy(bucket)
+  *                                (multi-group builds only)
   *   <dir>/segments/              SegmentBlock parquet, partitionBy(bucket),
   *                                sorted by (termHash, skey, blockId)
   *   <dir>/tombstones_strided/    replaced docIds, one sorted-long file
@@ -18,7 +22,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
   *                                (re-crawl deltas, carrying compactions;
   *                                see [[Tombstones]])
   *   <dir>/stats.json             IndexStats sidecar
-  *   <dir>/_checkpoints/          one JSON per (stage, unit)
+  *   <dir>/_checkpoints/          one JSON per (stage, unit): "stats",
+  *                                "postings" (builds), "segments" per
+  *                                bucket group (rowCount = its blocks)
   * }}}
   *
   * All IO goes through Hadoop `FileSystem`, so the same code runs on

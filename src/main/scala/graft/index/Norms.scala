@@ -213,7 +213,9 @@ object Norms {
             _.write(buf.array))
           sid
         }
-        .count() // materialize the writes
+        // materialize the writes; an RDD count adds no aggregate
+        // shuffle (a Dataset count's costs one more job)
+        .rdd.count()
     }(_.toString)
   }
 }

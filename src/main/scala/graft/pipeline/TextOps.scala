@@ -77,8 +77,6 @@ object TextOps {
         slice(t, start, pos + window - start + lit(1))))
   }
 
-  def tokenCount(text: Column): Column = size(toks(text)).cast("long")
-
   /** Whitespace token count (split on \s+, empties dropped). */
   def wsTokenCount(text: Column): Column =
     size(array_remove(split(text, "\\s+"), "")).cast("long")

@@ -14,6 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Tombstones rest in one form, the strided sidecar: a `tombstones/`
   * parquet path outside [[graft.index.Tombstones]] (which refuses the
   * retired form) is the second copy coming back.
+  * An index generation is written by [[graft.index.Generation]] only:
+  * a salt key built, or a generation's docs, terms or segments written,
+  * anywhere else is a second generation writer drifting from the first.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -55,6 +58,21 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("tombstone parquet paths appear only in Tombstones.scala") {
     val found = hits(Seq("/tombstones\""), "Tombstones.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("the salt key is built only in Generation.scala") {
+    val saltKey = """concat\(.*lit\("#"\)""".r
+    val found = hitsWhere("Generation.scala")(saltKey.findFirstIn(_).nonEmpty)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+    val writer = java.nio.file.Paths.get("src/main/scala/graft/index/Generation.scala")
+    assert(java.nio.file.Files.readAllLines(writer).toArray
+      .count(l => saltKey.findFirstIn(l.toString).nonEmpty) == 1)
+  }
+
+  test("a generation's docs, terms and segments are written only in Generation.scala") {
+    val artifactWrite = """\.parquet\(s?"[^"]*/(segments|terms|docs)"""".r
+    val found = hitsWhere("Generation.scala")(artifactWrite.findFirstIn(_).nonEmpty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 

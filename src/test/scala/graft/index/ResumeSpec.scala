@@ -26,34 +26,57 @@ class ResumeSpec extends AnyFunSuite {
       .sorted.toSeq
   }
 
-  test("crash after group 1, resume → identical segments") {
+  /** Every group checkpoint records its block count: together they
+    * count the rows of `segments/`. */
+  private def assertCheckpointsCountSegments(dir: String): Unit = {
+    val recorded = new CheckpointStore(spark, dir).list()
+      .filter(_.stage == "segments").map(_.rowCount).sum
+    assert(recorded == IndexPaths.segments(spark, dir).count(), dir)
+  }
+
+  /** Crash `run` after each group in turn, then run it again with
+    * `resume`, and check that no checkpoint committed before the crash
+    * (the `frontHalf` stages and the completed groups) re-ran and that
+    * the segments equal the clean run's. */
+  private def crashMatrix(cleanDir: String, prefix: String,
+                          frontHalf: Seq[String])(
+                          run: (String, IndexBuilder.Config, Boolean) => Unit): Unit =
+    (0 until cfg.numGroups).foreach { g =>
+      val crashDir = SparkTestSession.tmpDir(s"${prefix}_crash$g")
+      intercept[RuntimeException] {
+        run(crashDir, cfg.copy(failAfterGroup = g), false)
+      }
+      // only groups 0..g committed
+      val before = new CheckpointStore(spark, crashDir).list()
+      assert(before.count(_.stage == "segments") == g + 1)
+      frontHalf.foreach(st => assert(before.count(_.stage == st) == 1))
+
+      run(crashDir, cfg, true)
+      val after = new CheckpointStore(spark, crashDir).list()
+      assert(after.count(_.stage == "segments") == cfg.numGroups)
+      // completed groups and the whole front half must NOT re-run
+      // (same finishedMs)
+      val fAfter = after.map(c => (c.stage, c.unit) -> c.finishedMs).toMap
+      before.foreach { c =>
+        assert(fAfter((c.stage, c.unit)) == c.finishedMs,
+          s"${c.stage}_${c.unit} re-ran on resume after group $g")
+      }
+      assert(segmentFingerprint(crashDir) == segmentFingerprint(cleanDir),
+        s"resumed after group $g != uninterrupted")
+      assertCheckpointsCountSegments(crashDir)
+    }
+
+  test("crash after any group, resume → identical segments") {
     val docs = DocIds.fromPages(PagesGen.pages(spark, 900L), 6)
     docs.cache().count()
 
     val cleanDir = SparkTestSession.tmpDir("graft_clean")
     IndexBuilder.build(docs, cleanDir, cfg, buildId = "clean")
+    assertCheckpointsCountSegments(cleanDir)
 
-    val crashDir = SparkTestSession.tmpDir("graft_crash")
-    intercept[RuntimeException] {
-      IndexBuilder.build(docs, crashDir,
-        cfg.copy(failAfterGroup = 1), buildId = "crash")
+    crashMatrix(cleanDir, "graft", Seq("stats", "postings")) { (dir, c, resume) =>
+      IndexBuilder.build(docs, dir, c, buildId = "crash", resume = resume)
     }
-    // only groups 0..1 committed
-    val before = new CheckpointStore(spark, crashDir).list()
-    assert(before.count(_.stage == "segments") == 2)
-
-    IndexBuilder.build(docs, crashDir, cfg, buildId = "crash",
-      resume = true)
-    val after = new CheckpointStore(spark, crashDir).list()
-    assert(after.count(_.stage == "segments") == cfg.numGroups)
-    // resume must not have re-run groups 0..1 (same finishedMs)
-    val g01Before = before.filter(c => c.stage == "segments")
-      .map(c => c.unit -> c.finishedMs).toMap
-    val g01After = after.filter(c => c.stage == "segments" && c.unit <= 1)
-      .map(c => c.unit -> c.finishedMs).toMap
-    assert(g01After == g01Before.view.filterKeys(_ <= 1).toMap)
-
-    assert(segmentFingerprint(crashDir) == segmentFingerprint(cleanDir))
   }
 
   test("fused single-group build == staged multi-group build, byte-identical") {
@@ -75,6 +98,39 @@ class ResumeSpec extends AnyFunSuite {
     // and both checkpoints exist so resume skips the fused build whole
     val ck = new CheckpointStore(spark, fusedDir)
     assert(ck.isComplete("postings", 0) && ck.isComplete("segments", 0))
+    assertCheckpointsCountSegments(fusedDir)
+  }
+
+  test("compacting a base alone gives the base's own build back") {
+    // one writer: a compaction of one generation re-derives exactly
+    // what the build wrote — segments, dictionary, docs, norms, stats
+    val posCfg = cfg.copy(withPositions = true)
+    val baseDir = SparkTestSession.tmpDir("graft_parity_base")
+    IndexBuilder.build(DocIds.fromPages(PagesGen.pages(spark, 600L), 4),
+      baseDir, posCfg, "base")
+    val outDir = SparkTestSession.tmpDir("graft_parity_out")
+    val st = Compaction.compact(spark, Seq(baseDir), outDir, posCfg)
+    assert(segmentFingerprint(outDir) == segmentFingerprint(baseDir))
+    def rows[T](ds: org.apache.spark.sql.Dataset[T]) =
+      ds.collect().map(_.toString).sorted.toSeq
+    assert(rows(IndexPaths.terms(spark, outDir)) ==
+      rows(IndexPaths.terms(spark, baseDir)))
+    assert(rows(IndexPaths.docs(spark, outDir)) ==
+      rows(IndexPaths.docs(spark, baseDir)))
+    val base = IndexPaths.readStats(spark, baseDir)
+    assert(st == base.copy(buildId = st.buildId))
+    assert(IndexPaths.readStats(spark, outDir) == st)
+    def norms(dir: String): Map[String, Seq[Byte]] = {
+      val fs = IndexPaths.fs(spark, dir)
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/norms"))
+        .map(_.getPath).filter(_.getName.matches("s\\d+\\.bin")).map { p =>
+          val in = fs.open(p)
+          try p.getName -> org.apache.commons.io.IOUtils.toByteArray(in).toSeq
+          finally in.close()
+        }.toMap
+    }
+    assert(norms(baseDir).nonEmpty && norms(outDir) == norms(baseDir))
+    assertCheckpointsCountSegments(outDir)
   }
 
   test("recompacting DIFFERENT generations into a reused outDir recomputes") {
@@ -108,7 +164,7 @@ class ResumeSpec extends AnyFunSuite {
       "reused-outDir recompaction served stale artifacts")
   }
 
-  test("compaction crash after group 1, resume → identical segments") {
+  test("compaction crash after any group, resume → identical segments") {
     val basePages = PagesGen.pages(spark, 500L)
     val deltaPages = {
       import spark.implicits._
@@ -124,27 +180,11 @@ class ResumeSpec extends AnyFunSuite {
 
     val cleanDir = SparkTestSession.tmpDir("graft_cres_clean")
     Compaction.compact(spark, Seq(baseDir, deltaDir), cleanDir, cfg)
+    assertCheckpointsCountSegments(cleanDir)
 
-    val crashDir = SparkTestSession.tmpDir("graft_cres_crash")
-    intercept[RuntimeException] {
-      Compaction.compact(spark, Seq(baseDir, deltaDir), crashDir,
-        cfg.copy(failAfterGroup = 1))
+    crashMatrix(cleanDir, "graft_cres", Seq("stats")) { (dir, c, _) =>
+      Compaction.compact(spark, Seq(baseDir, deltaDir), dir, c)
     }
-    val before = new CheckpointStore(spark, crashDir).list()
-    assert(before.count(_.stage == "segments") == 2)
-    assert(before.count(_.stage == "stats") == 1)
-
-    Compaction.compact(spark, Seq(baseDir, deltaDir), crashDir, cfg)
-    val after = new CheckpointStore(spark, crashDir).list()
-    assert(after.count(_.stage == "segments") == cfg.numGroups)
-    // completed groups and the whole front half must NOT re-run
-    val fBefore = before.map(c => (c.stage, c.unit) -> c.finishedMs).toMap
-    val fAfter = after.map(c => (c.stage, c.unit) -> c.finishedMs).toMap
-    fBefore.foreach { case (k, v) =>
-      assert(fAfter(k) == v, s"$k re-ran on resume")
-    }
-    assert(segmentFingerprint(crashDir) == segmentFingerprint(cleanDir),
-      "resumed compaction != uninterrupted compaction")
 
     // cache-vs-recompute knob: graft.compaction.cacheDecoded=false
     // re-decodes the posting stream per consumer instead of persisting
