@@ -1,10 +1,12 @@
 package graft.query
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Tokenize
-import graft.index.{IndexBuilder, IndexPaths, SegmentBlock, TermMeta}
+import graft.index.{IndexBuilder, IndexPaths, IndexStats, Norms, SegmentBlock,
+  TermMeta, Tombstones}
 
 case class QuerySpec(queryId: Long, text: String)
 case class SearchHit(queryId: Long, rank: Int, docId: Long, score: Double)
@@ -14,22 +16,30 @@ case class SearchHit(queryId: Long, rank: Int, docId: Long, score: Double)
   * /root/reference/packages/api/spheraform_api/routers/search.py:16-77,
   * re-expressed as a scatter/gather Spark job per the north rule).
   *
-  * Plan for a batch of queries:
+  * Every entry point serves through one per-call [[View]] of the live
+  * generations, as the reference runs count, page and facets off one
+  * filtered catalogue query: their dirs and stats, the merged global
+  * stats, the cached pruned dictionary lookup with its one
+  * cross-generation `TermMeta` merge, and the one pruned segment scan
+  * and docId-range scatter.
+  *
+  * Plan for a batch of queries ([[prepare]], then the gather):
   *   1. driver: tokenize queries (same Tokenize as the build), look up
-  *      per-term (df, saltCount) from the terms dictionary with a
-  *      termHash pushdown filter (dictionary is range-sorted by
-  *      termHash → row-group pruning),
-  *   2. scan only touched segments: partition pruning on `bucket` +
-  *      min/max pruning on `termHash` (blocks are sorted by termHash
-  *      within files),
-  *   3. scatter: each block is keyed by (queryId, docId-range); a
+  *      per-term (df, saltCount) through the view — a termHash
+  *      pushdown filter on the range-sorted dictionary prunes row
+  *      groups — and derive the MaxScore bounds and θ₀,
+  *   2. the view scans only touched segments: partition pruning on
+  *      `bucket` + min/max pruning on `termHash` (blocks are sorted by
+  *      termHash within files),
+  *   3. the view scatters each block by (queryId, docId-range); a
   *      stopword's giant posting list is thereby split across ranges
   *      so no single task owns it,
-  *   4. gather: per (queryId, range) task builds cursors and runs
-  *      block-max WAND (or conjunctive intersection) over a bounded
-  *      min-heap → partial top-k,
-  *   5. final merge per queryId: k·R tiny rows → exact global top-k
-  *      with the (score desc, docId asc) tie-break.
+  *   4. gather: per (queryId, range) [[Gather.gatherRange]] — a pure
+  *      function of the range's blocks, a dl lookup and the tombstone
+  *      mask — builds cursors and runs block-max WAND (or conjunctive
+  *      intersection) over a bounded min-heap → partial top-k,
+  *   5. [[Gather.merge]] per queryId on the driver: k·R tiny rows →
+  *      exact global top-k with the (score desc, docId asc) tie-break.
   *
   * Exactness across ranges: ranges partition docId space; a block
   * straddling a boundary is sent to every range it overlaps and each
@@ -136,9 +146,193 @@ object Searcher {
     (lo, hi)
   }
 
+  /** One call's serve view over the live generations. Empty
+    * generations (zero docs — e.g. a delta where change was detected
+    * but the hash diff selected nothing) have no readable terms or
+    * segments parquet, so no scan reads them; their TOMBSTONES still
+    * count, so every entry point builds its mask over the FULL dir
+    * list. `terms` are looked up (cached, pruned) on first use only.
+    * Driver-side; no closure captures it.
+    */
+  private final class View(spark: SparkSession, indexDirs: Seq[String],
+                           terms: Seq[String]) {
+    val (dirs, statsList) = indexDirs
+      .map(d => d -> IndexPaths.readStats(spark, d))
+      .filter(_._2.numDocs > 0).unzip
+    def isEmpty: Boolean = dirs.isEmpty
+
+    /** Global stats combine exactly (N = ΣnumDocs, avgdl =
+      * ΣtotalTokens / ΣnumDocs), and block bounds derive from (maxTf,
+      * minDl) under them — so results are rank-identical to a full
+      * rebuild over the union corpus (modulo docId numbering).
+      */
+    lazy val stats: IndexStats = {
+      val nTotal = statsList.map(_.numDocs).sum
+      val tokTotal = statsList.map(_.totalTokens).sum
+      statsList.head.copy(
+        numDocs = nTotal,
+        totalTokens = tokTotal,
+        avgdl = if (statsList.size == 1) statsList.head.avgdl
+                else if (nTotal == 0) 0.0 else tokTotal.toDouble / nTotal,
+        maxDocId = statsList.map(_.maxDocId).max,
+        // maxDl must cover EVERY generation: θ₀ = score(tf=1, dl=maxDl)
+        // is only a safe lower bound under the global max dl. A
+        // generation reporting 0 (an old stats.json) means "unknown" —
+        // propagate 0 so theta0Free disables itself.
+        maxDl = if (statsList.exists(_.maxDl <= 0)) 0L
+                else statsList.map(_.maxDl).max)
+    }
+    def maxDoc: Long = stats.maxDocId + 1
+
+    /** Per generation: term → meta (the salt layout is per generation). */
+    lazy val metaPerIndex: Seq[Map[String, TermMeta]] =
+      lookupMetas(spark, dirs, terms)
+
+    /** Term → meta merged across generations: df/cf summed, maxTf
+      * max, minDl min. */
+    lazy val merged: Map[String, TermMeta] = terms.flatMap { term =>
+      val metas = metaPerIndex.flatMap(_.get(term))
+      if (metas.isEmpty) None
+      else Some(term -> metas.head.copy(df = metas.map(_.df).sum,
+        cf = metas.map(_.cf).sum, maxTf = metas.map(_.maxTf).max,
+        minDl = metas.map(_.minDl).min))
+    }.toMap
+
+    /** Storage keys of `term` in every generation holding it. */
+    private def keysOf(term: String): Seq[String] =
+      metaPerIndex.flatMap(_.get(term)).flatMap(storageKeys(term, _))
+
+    /** Only the touched segments of every generation: partition
+      * pruning on `bucket` + row-group pruning on `termHash`, per
+      * generation's own keys and bucket count, unioned. */
+    private def segments(scanTerms: Seq[String]): Dataset[SegmentBlock] = {
+      import spark.implicits._
+      dirs.indices.map { g =>
+        val hs = scanTerms.flatMap(t => metaPerIndex(g).get(t).toSeq
+          .flatMap(storageKeys(t, _))).map(IndexBuilder.xxhash)
+        val bks = hs.map(IndexBuilder.bucketOf(_, statsList(g).numBuckets))
+          .distinct
+        IndexPaths.segments(spark, dirs(g))
+          .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
+      }.reduce(_ union _)
+    }
+
+    /** The one scatter: the pruned blocks of `termUses`' terms, each
+      * emitted once per use of its storage key (uses merge across
+      * generations — identical values for identical keys) and per
+      * docId range it overlaps, `rangeOf(firstDocId)` to
+      * `rangeOf(lastDocId)`. Unless positions are verified, `posEnc`
+      * is blanked first: the scatter replicates blocks per (use,
+      * range), and a positional index would otherwise pay 2-3x shuffle
+      * on every plain query.
+      */
+    def scatter[U, O: Encoder](termUses: Seq[(String, U)],
+                               verifyPositions: Boolean, ranges: Int)(
+        emit: (SegmentBlock, U, Int) => Iterator[O]): Dataset[O] = {
+      val uses = termUses.flatMap { case (term, u) => keysOf(term).map(_ -> u) }
+        .groupBy(_._1).map { case (key, v) => key -> v.map(_._2).distinct }
+      val bcUses = spark.sparkContext.broadcast(uses)
+      val maxDoc = this.maxDoc
+      segments(termUses.map(_._1).distinct).flatMap { b0 =>
+        val b = if (verifyPositions || b0.posEnc == null || b0.posEnc.isEmpty) b0
+                else b0.copy(posEnc = Array.emptyByteArray)
+        bcUses.value.getOrElse(b.skey, Nil).iterator.flatMap { u =>
+          (rangeOf(b.firstDocId, ranges, maxDoc) to
+           rangeOf(b.lastDocId, ranges, maxDoc)).iterator.flatMap(emit(b, u, _))
+        }
+      }
+    }
+  }
+
+  /** One cursor per (term, storage key) of a range's (termIdx, idf,
+    * block) rows, its blocks in docId order. */
+  private def cursorsOf(blocks: Seq[(Int, Double, SegmentBlock)], avgdl: Double,
+                        lo: Long, hi: Long, dl: Long => Long): Array[Cursor] =
+    blocks.groupBy(x => (x._1, x._3.skey)).valuesIterator.map { rows =>
+      new Cursor(rows.head._1, rows.head._2,
+        rows.map(_._3).sortBy(_.firstDocId).toArray, avgdl, lo, hi, dl)
+    }.toArray
+
   /** Driver-side query plan for one query. */
   private case class Plan(queryId: Long, terms: Seq[TermMeta],
                           termIdx: Map[String, Int])
+
+  /** A query batch's gather: everything a (queryId, range) group needs
+    * besides its blocks, the dl lookup and the tombstone mask. Pure —
+    * it runs in a gather task or, with no SparkSession, on the driver.
+    * `depth` = k + offset is the cut every bound targets.
+    */
+  private[query] final case class Gather(ranges: Int, maxDoc: Long,
+      avgdl: Double, depth: Int, offset: Int, and: Boolean,
+      theta0: Map[Long, Double], dfOrder: Map[Long, Seq[Int]]) {
+
+    /** Partial top-depth of query `qid` over docId range `range`, from
+      * its (termIdx, idf, block) rows; `mask` null means none. */
+    def gatherRange(qid: Long, range: Int,
+                    blocks: Seq[(Int, Double, SegmentBlock)],
+                    norms: Long => Long,
+                    mask: Long => Boolean): Array[(Long, Double)] = {
+      // exact rangeOf preimage — the silent-doc-loss proof lives on
+      // rangeWindow
+      val (lo, hi) = rangeWindow(range, ranges, maxDoc)
+      val floor = theta0.getOrElse(qid, Double.NegativeInfinity)
+      if (!and && blocks.map(_._1).distinct.size == 1)
+        // the whole group is ONE term (single-term query, possibly
+        // many salted sub-runs): per-posting scores are independent —
+        // impact-ordered block evaluation with early termination
+        // replaces the degenerate WAND merge
+        Wand.singleTermTopK(blocks.map(_._3).toArray, blocks.head._2,
+          avgdl, depth, lo, hi, floor, mask, norms)
+      else {
+        val cursors = cursorsOf(blocks, avgdl, lo, hi, norms)
+        if (!and) Wand.wandOr(cursors, depth, floor, mask)
+        else {
+          // a term with no block in this range means no match in it;
+          // groups in df order, so the rarest term drives
+          val groups = dfOrder(qid).map(t => cursors.filter(_.termIdx == t))
+            .toArray
+          if (groups.exists(_.isEmpty)) Array.empty[(Long, Double)]
+          else Wand.intersectAnd(groups, depth, mask)
+        }
+      }
+    }
+
+    /** The final merge of partial (queryId, docId, score) rows: per
+      * query the ranks [offset, depth), numbered from offset + 1. */
+    def merge(partials: Seq[(Long, Long, Double)]): Seq[SearchHit] =
+      partials.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
+        rows.sortBy { case (_, d, s) => (-s, d) }
+          .slice(offset, depth).zipWithIndex
+          .map { case ((_, d, s), i) => SearchHit(qid, offset + i + 1, d, s) }
+      }
+  }
+
+  /** The θ₀ probe's scoring of one block: each posting's score as the
+    * query's only term (a lower bound on its total). Pure. */
+  private def probeScores(qid: Long, b: SegmentBlock, idf: Double,
+                          avgdl: Double,
+                          dl: Long => Long): Iterator[(Long, Double)] = {
+    val tfs = graft.index.Codec.decodeVarByte(b.tfsEnc, b.n)
+    val ds = graft.index.Codec.decodeDeltas(b.docIdsEnc, b.n, b.firstDocId)
+    (0 until b.n).iterator.map(i =>
+      (qid, BM25.score(tfs(i), dl(ds(i)), avgdl, idf)))
+  }
+
+  /** The matching docIds of one docId window [lo, hi) from its
+    * (distinct-term index, block) rows: every slot's term present
+    * (and, verifying positions, adjacent in slot order), unmasked.
+    * Pure; matching never scores, so no idf or norms lookup. */
+  private def matchRange(blocks: Seq[(Int, SegmentBlock)],
+                         slots: Array[Int], verifyPositions: Boolean,
+                         lo: Long, hi: Long,
+                         mask: Long => Boolean): Iterator[Long] = {
+    val cursors = cursorsOf(blocks.map { case (t, b) => (t, 0.0, b) }, 1.0,
+      lo, hi, _ => 1L)
+    val slotGroups = slots.map(t => cursors.filter(_.termIdx == t))
+    val hits = (if (verifyPositions) Wand.phraseDocs(slotGroups)
+                else Wand.andDocs(slotGroups)).iterator
+    if (mask == null) hits else hits.filterNot(mask)
+  }
 
   def search(spark: SparkSession, indexDir: String,
              queries: Seq[QuerySpec], k: Int = 10, mode: Mode = Or,
@@ -147,21 +341,22 @@ object Searcher {
       offset = offset)
 
   /** Search the union of several index generations (a base build plus
-    * incremental deltas). Global stats combine exactly
-    * (N = ΣnumDocs, avgdl = ΣtotalTokens / ΣnumDocs, df = Σdf per
-    * term), and block bounds are derived from (maxTf, minDl) under
-    * those CURRENT stats — so results are rank-identical to a full
-    * rebuild over the union corpus (modulo docId numbering).
-    */
-  /** @param probeMinTotalDf queries whose summed df exceeds this run a
+    * incremental deltas). Global stats combine exactly (N = ΣnumDocs,
+    * avgdl = ΣtotalTokens / ΣnumDocs, df = Σdf per term), and block
+    * bounds are derived from (maxTf, minDl) under those CURRENT stats
+    * — so results are rank-identical to a full rebuild over the union
+    * corpus (modulo docId numbering). Until compaction the stats still
+    * count tombstoned versions; those are only dropped from the
+    * ranking.
+    *
+    * @param probeMinTotalDf queries whose summed df exceeds this run a
     *        θ₀ PROBE first: one batched job scores only each query's
     *        rarest term (single-term contributions lower-bound totals,
     *        so the k-th best is a safe, much tighter θ₀). Cheap
     *        queries skip the extra job; stopword-heavy ones — the
     *        scatter-volume hazard — pay ~one small scan to prune the
     *        big one.
-    */
-  /** @param offset serve-path pagination: skip the first `offset`
+    * @param offset serve-path pagination: skip the first `offset`
     *        ranked hits and return the next k (ranks continue —
     *        page 2 of k=10 carries ranks 11-20). Internally the job
     *        retrieves top (offset + k): every pruning bound (θ₀, df ≥
@@ -190,21 +385,62 @@ object Searcher {
                   probeMinTotalDf: Long,
                   offset: Int): Dataset[SearchHit] = {
     import spark.implicits._
+    prepare(spark, indexDirs, queries, k, mode, numRanges, probeMinTotalDf,
+        offset) match {
+      case None => spark.emptyDataset[SearchHit]
+      case Some(p) =>
+        val bcGather = spark.sparkContext.broadcast(p.gather)
+        // locals: the task closure must not capture `p`, whose
+        // Dataset does not serialize
+        val (gens, conf, tomb) = (p.gens, p.conf, p.mask)
+        val partials = p.scattered
+          .groupByKey(x => (x._1, x._2))
+          .flatMapGroups { (key: (Long, Int), it: Iterator[Scattered]) =>
+            // task-scoped reader: flatMapGroups runs once per GROUP and
+            // a partition holds many (query, range) groups — a fresh
+            // Reader per group would re-read the same norms windows
+            val norms = Norms.taskReader(gens.value, conf.value)
+            bcGather.value.gatherRange(key._1, key._2,
+              it.map(x => (x._3, x._4, x._5)).toSeq, norms.dl, tomb.value.fn)
+              .iterator.map { case (d, s) => (key._1, d, s) }
+          }
+        // k·R rows per query — tiny by construction, so collect and
+        // merge on the driver rather than paying another shuffle stage
+        // (measured ~30% of single-query latency). This is the
+        // reference's serve-path shape too: workers return partial
+        // top-k, the coordinator merges (reference
+        // packages/api/spheraform_api/routers/search.py:61-64).
+        spark.createDataset(p.gather.merge(partials.collect().toSeq))
+    }
+  }
+
+  /** A scattered block: (queryId, range, termIdx, idf, block). */
+  private[query] type Scattered = (Long, Int, Int, Double, SegmentBlock)
+
+  /** The driver half of a searchMulti batch: its gather, its scattered
+    * blocks (not yet read), and the broadcast norms routing and
+    * tombstone mask the gather tasks use. */
+  private[query] final case class Prepared(gather: Gather,
+      scattered: Dataset[Scattered], gens: Broadcast[Array[Norms.GenMeta]],
+      conf: Broadcast[Norms.SerConf], mask: Broadcast[Tombstones.Mask])
+
+  /** Everything of a searchMulti batch up to its gather shuffle — the
+    * θ₀ probe job included. None when nothing can match. */
+  private[query] def prepare(spark: SparkSession, indexDirs: Seq[String],
+                             queries: Seq[QuerySpec], k: Int, mode: Mode,
+                             numRanges: Int, probeMinTotalDf: Long,
+                             offset: Int): Option[Prepared] = {
+    import spark.implicits._
     // k <= 0 is a valid degenerate ask (e.g. an empty pagination
     // window) — TopK(0) would crash in the gather tasks
-    if (k <= 0) return spark.emptyDataset[SearchHit]
-    val depth = k + math.max(0, offset) // the cut every bound targets
-    // Empty generations (zero docs — e.g. a delta where change was
-    // detected but the hash diff selected nothing) have no readable
-    // terms/segments parquet; drop them from every scan. Their
-    // TOMBSTONES still count (an empty generation can carry them), so
-    // the mask below is built over the FULL dir list.
-    val liveGens = indexDirs.map(d => d -> IndexPaths.readStats(spark, d))
-      .filter(_._2.numDocs > 0)
-    val tombMaskAll = graft.index.Tombstones.maskFor(spark, indexDirs)
-    if (liveGens.isEmpty) return spark.emptyDataset[SearchHit]
-    val liveDirs = liveGens.map(_._1)
-    val statsList = liveGens.map(_._2)
+    if (k <= 0) return None
+    val off = math.max(0, offset)
+    val depth = k + off
+    val qTerms: Map[Long, Seq[String]] = queries.map { q =>
+      q.queryId -> Tokenize.tokens(q.text).distinct.toSeq
+    }.toMap
+    val allTerms = qTerms.values.flatten.toSeq.distinct
+    val view = new View(spark, indexDirs, allTerms)
     // Re-crawl tombstones: replaced base docIds are masked out of
     // every evaluator (the dead version never surfaces). Until
     // compaction, global stats still count the dead docs, so the free
@@ -212,53 +448,21 @@ object Searcher {
     // disabled — correctness over speed in the transient window.
     // Small sets broadcast; above the threshold the mask reads the
     // strided sidecar per docId window (never an O(corpus) driver Set).
-    val tombMask = tombMaskAll
-    val bcTomb = spark.sparkContext.broadcast(tombMask)
+    val tombMask = Tombstones.maskFor(spark, indexDirs)
+    if (view.isEmpty || allTerms.isEmpty) return None
     val noTomb = tombMask.isEmpty
     // norms-sidecar routing: generation dirs + docId ranges + the
     // Hadoop conf (tasks open stride files lazily; each holds only its
     // generation's docId window, 4 B per doc)
     val bcGens = spark.sparkContext.broadcast(
-      liveDirs.zip(statsList).map { case (d, st) =>
-        graft.index.Norms.GenMeta(d, st.minDocId, st.maxDocId)
+      view.dirs.zip(view.statsList).map { case (d, st) =>
+        Norms.GenMeta(d, st.minDocId, st.maxDocId)
       }.toArray)
     val bcConf = spark.sparkContext.broadcast(
-      new graft.index.Norms.SerConf(
-        spark.sparkContext.hadoopConfiguration))
-    val nTotal = statsList.map(_.numDocs).sum
-    val tokTotal = statsList.map(_.totalTokens).sum
-    val stats = statsList.head.copy(
-      numDocs = nTotal,
-      totalTokens = tokTotal,
-      avgdl = if (statsList.size == 1) statsList.head.avgdl
-              else if (nTotal == 0) 0.0 else tokTotal.toDouble / nTotal,
-      maxDocId = statsList.map(_.maxDocId).max,
-      // maxDl must cover EVERY generation: θ₀ = score(tf=1, dl=maxDl)
-      // is only a safe lower bound under the global max dl. A
-      // generation reporting 0 (an old stats.json) means "unknown" —
-      // propagate 0 so theta0Free disables itself.
-      maxDl = if (statsList.exists(_.maxDl <= 0)) 0L
-              else statsList.map(_.maxDl).max)
-
-    // 1. tokenize + dictionary lookup (driver; dictionaries pruned by
-    //    termHash pushdown, not a full scan); df summed across
-    //    generations for the global idf
-    val qTerms: Map[Long, Seq[String]] = queries.map { q =>
-      q.queryId -> Tokenize.tokens(q.text).distinct.toSeq
-    }.toMap
-    val allTerms = qTerms.values.flatten.toSeq.distinct
-    if (allTerms.isEmpty) return spark.emptyDataset[SearchHit]
-    // per index generation: term -> meta (salt layout is per-index),
-    // via the shared cached pruned lookup
-    val metaPerIndex: Seq[Map[String, TermMeta]] =
-      lookupMetas(spark, liveDirs, allTerms)
-    val metaByTerm: Map[String, TermMeta] = allTerms.flatMap { term =>
-      val metas = metaPerIndex.flatMap(_.get(term))
-      if (metas.isEmpty) None
-      else Some(term -> metas.head.copy(df = metas.map(_.df).sum,
-        cf = metas.map(_.cf).sum, maxTf = metas.map(_.maxTf).max,
-        minDl = metas.map(_.minDl).min))
-    }.toMap
+      new Norms.SerConf(spark.sparkContext.hadoopConfiguration))
+    val stats = view.stats
+    val avgdl = stats.avgdl
+    val metaByTerm = view.merged
 
     val plans: Seq[Plan] = queries.flatMap { q =>
       val metas = qTerms(q.queryId).flatMap(metaByTerm.get)
@@ -271,25 +475,25 @@ object Searcher {
         usable.sortBy(_.df), // AND driver order: rarest first
         qTerms(q.queryId).zipWithIndex.toMap))
     }
-    if (plans.isEmpty) return spark.emptyDataset[SearchHit]
+    if (plans.isEmpty) return None
 
-    // 2a. MaxScore bounds (driver, from dictionary metadata alone):
-    //     UB_t    = best possible contribution of term t (maxTf, minDl
-    //               under CURRENT stats),
-    //     θ₀(q)   = a SAFE lower bound on the final k-th score: any
-    //               term with df ≥ k guarantees k docs each scoring at
-    //               least its worst single-posting score (tf=1,
-    //               dl = corpus maxDl). OR mode only — AND result
-    //               counts are unknown a priori.
-    //     θ₀'s real effect is seeding each gather task's WAND floor:
-    //     a docId-range whose range-local bounds can't reach θ₀ is
-    //     skipped without decoding anything (SCALE.md).
-    //     residual(q,t) = θ₀(q) − Σ_{t'≠t} UB_{t'} additionally gates
-    //     blocks BEFORE the scatter shuffle; with this free θ₀ the
-    //     gate is provably inert (θ₀ ≤ UB of its justifying term) —
-    //     it is the plug-in point for a tighter probed θ₀.
+    // MaxScore bounds (driver, from dictionary metadata alone):
+    //   UB_t    = best possible contribution of term t (maxTf, minDl
+    //             under CURRENT stats),
+    //   θ₀(q)   = a SAFE lower bound on the final k-th score: any
+    //             term with df ≥ k guarantees k docs each scoring at
+    //             least its worst single-posting score (tf=1,
+    //             dl = corpus maxDl). OR mode only — AND result
+    //             counts are unknown a priori.
+    //   θ₀'s real effect is seeding each gather task's WAND floor:
+    //   a docId-range whose range-local bounds can't reach θ₀ is
+    //   skipped without decoding anything (SCALE.md).
+    //   residual(q,t) = θ₀(q) − Σ_{t'≠t} UB_{t'} additionally gates
+    //   blocks BEFORE the scatter shuffle; with this free θ₀ the
+    //   gate is provably inert (θ₀ ≤ UB of its justifying term) —
+    //   it is the plug-in point for a tighter probed θ₀.
     val ubByTerm: Map[String, Double] = metaByTerm.map { case (term, t) =>
-      term -> BM25.score(t.maxTf.toLong, t.minDl.toLong, stats.avgdl,
+      term -> BM25.score(t.maxTf.toLong, t.minDl.toLong, avgdl,
         BM25.idf(stats.numDocs, t.df))
     }
     val theta0Free: Map[Long, Double] = plans.map { p =>
@@ -298,8 +502,7 @@ object Searcher {
           Double.NegativeInfinity
         else {
           val cands = p.terms.filter(_.df >= depth).map(t =>
-            BM25.score(1L, stats.maxDl, stats.avgdl,
-              BM25.idf(stats.numDocs, t.df)))
+            BM25.score(1L, stats.maxDl, avgdl, BM25.idf(stats.numDocs, t.df)))
           if (cands.isEmpty) Double.NegativeInfinity
           // nextDown: ties at exactly θ₀ must survive (exactness)
           else Math.nextDown(cands.max)
@@ -322,47 +525,20 @@ object Searcher {
       }
       if (probePlans.isEmpty) Map.empty
       else {
-        val avgdlP = stats.avgdl
-        // rarest term per query → its storage keys per generation
-        val probeUses: Map[String, Seq[(Long, Double)]] = probePlans
-          .flatMap { p =>
-            val t = p.terms.head // sorted by df asc
-            val idf = BM25.idf(stats.numDocs, t.df)
-            metaPerIndex.flatMap(_.get(t.term)).flatMap { tm =>
-              storageKeys(t.term, tm).map(kk => kk -> ((p.queryId, idf)))
-            }
-          }
-          .groupBy(_._1).map { case (kk, v) => kk -> v.map(_._2).distinct }
-        val bcProbe = spark.sparkContext.broadcast(probeUses)
-        val pBlocks = liveDirs.zip(statsList).map { case (d, st) =>
-          val hs = probeUses.keys.map(IndexBuilder.xxhash).toSeq
-          val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets))
-            .distinct
-          IndexPaths.segments(spark, d)
-            .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-        }.reduce(_ union _)
-        val kLocal = depth
-        val bcGensP = bcGens
-        val bcConfP = bcConf
-        pBlocks.mapPartitions { it =>
-          val norms = new graft.index.Norms.Reader(bcGensP.value,
-            bcConfP.value)
-          it.flatMap { b =>
-            bcProbe.value.getOrElse(b.skey, Seq.empty).iterator.flatMap {
-              case (qid, idf) =>
-                val tfs = graft.index.Codec.decodeVarByte(b.tfsEnc, b.n)
-                val ds = graft.index.Codec.decodeDeltas(b.docIdsEnc,
-                  b.n, b.firstDocId)
-                (0 until b.n).iterator.map(i =>
-                  (qid, BM25.score(tfs(i), norms.dl(ds(i)), avgdlP, idf)))
-            }
-          }
+        val rarest = probePlans.map { p =>
+          val t = p.terms.head // sorted by df asc
+          t.term -> ((p.queryId, BM25.idf(stats.numDocs, t.df)))
+        }
+        view.scatter(rarest, verifyPositions = false, ranges = 1) {
+          case (b, (qid, idf), _) =>
+            probeScores(qid, b, idf, avgdl,
+              Norms.taskReader(bcGens.value, bcConf.value).dl)
         }
           .groupByKey(_._1)
           .mapGroups { (qid: Long, it: Iterator[(Long, Double)]) =>
-            val h = new TopK(kLocal)
+            val h = new TopK(depth)
             it.foreach(x => h.offer(x._2, 0L))
-            (qid, if (h.size >= kLocal) h.result().last._2
+            (qid, if (h.size >= depth) h.result().last._2
                   else Double.NegativeInfinity)
           }
           .collect()
@@ -375,135 +551,28 @@ object Searcher {
       q -> math.max(v, probed.getOrElse(q, Double.NegativeInfinity))
     }
 
-    // 2b. storage keys (term or salted sub-runs) → touched buckets and
-    //     hashes, PER index generation (salt layout is per-index; idf
-    //     is global). The skey→(query, termIdx, idf, residual) map
-    //     merges across generations — identical values for identical
-    //     keys.
-    val keyUses: Map[String, Seq[(Long, Int, Double, Double)]] = plans
-      .flatMap { p =>
-        val ubSum = p.terms.map(t => ubByTerm(t.term)).sum
-        p.terms.flatMap { t =>
-          val idf = BM25.idf(stats.numDocs, t.df)
-          val residual = theta0(p.queryId) - (ubSum - ubByTerm(t.term))
-          metaPerIndex.flatMap(_.get(t.term)).flatMap { tm =>
-            storageKeys(t.term, tm).map(k =>
-              k -> ((p.queryId, p.termIdx(t.term), idf, residual)))
-          }
-        }
-      }
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).distinct }
-    val bcUses = spark.sparkContext.broadcast(keyUses)
-    val bcTheta0 = spark.sparkContext.broadcast(theta0)
-    val maxDoc = stats.maxDocId + 1
-    val ranges = math.max(1, numRanges)
-
-    // per-query df order for the AND driver choice
-    val dfOrder: Map[Long, Seq[Int]] =
-      plans.map(p => p.queryId -> p.terms.map(t => p.termIdx(t.term))).toMap
-    val bcDfOrder = spark.sparkContext.broadcast(dfOrder)
-    val isAnd = mode == And
-    val avgdl = stats.avgdl
-
-    // 3. scan touched segments of every generation (partition pruning
-    //    on bucket + row-group pruning on termHash), union, scatter
-    val blocks = liveDirs.zip(statsList).map { case (d, st) =>
-      val idxMetas = metaPerIndex(liveDirs.indexOf(d))
-      val idxKeys = plans.flatMap(_.terms.map(_.term)).distinct
-        .flatMap(term => idxMetas.get(term).toSeq
-          .flatMap(tm => storageKeys(term, tm)))
-      val idxHashes = idxKeys.map(IndexBuilder.xxhash)
-      val idxBuckets = idxHashes
-        .map(h => IndexBuilder.bucketOf(h, st.numBuckets)).distinct
-      IndexPaths.segments(spark, d)
-        .filter($"bucket".isin(idxBuckets: _*) &&
-          $"termHash".isin(idxHashes: _*))
-    }.reduce(_ union _)
-
-    val scattered = blocks
-      // BM25 never reads positions — blank posEnc before the scatter
-      // replicates blocks per (query, range), or a positional index
-      // pays 2-3x shuffle on every plain query
-      .map(b => if (b.posEnc == null || b.posEnc.isEmpty) b
-                else b.copy(posEnc = Array.emptyByteArray))
-      .flatMap { b =>
-      bcUses.value.getOrElse(b.skey, Seq.empty).iterator.flatMap {
-        case (qid, tIdx, idf, residual) =>
-          // MaxScore gate BEFORE the shuffle: the block's exact bound
-          // under current stats vs this (query, term)'s residual
-          val bound = BM25.score(b.maxTf.toLong, b.minDl.toLong,
-            avgdl, idf)
-          if (bound < residual) Iterator.empty
-          else (rangeOf(b.firstDocId, ranges, maxDoc) to
-                rangeOf(b.lastDocId, ranges, maxDoc)).iterator
-            .map(r => (qid, r, tIdx, idf, b))
+    // every (query, term) use: its idf is global, its residual gates
+    // blocks before the shuffle
+    val uses = plans.flatMap { p =>
+      val ubSum = p.terms.map(t => ubByTerm(t.term)).sum
+      p.terms.map { t =>
+        t.term -> ((p.queryId, p.termIdx(t.term), BM25.idf(stats.numDocs, t.df),
+          theta0(p.queryId) - (ubSum - ubByTerm(t.term))))
       }
     }
-
-    // 4. gather: WAND per (queryId, range) → partial top-k
-    val partials = scattered
-      .groupByKey(x => (x._1, x._2))
-      .flatMapGroups { (key: (Long, Int),
-                        it: Iterator[(Long, Int, Int, Double, SegmentBlock)]) =>
-        val (qid, r) = key
-        // exact rangeOf preimage — the silent-doc-loss proof lives on
-        // rangeWindow
-        val (lo, hi) = rangeWindow(r, ranges, maxDoc)
-        // group blocks per (termIdx, skey) → cursors
-        val bySkey = it.toSeq.groupBy(x => (x._3, x._5.skey))
-        // task-scoped reader: flatMapGroups runs once per GROUP and a
-        // partition holds many (query, range) groups — a fresh Reader
-        // per group would re-read the same norms windows
-        val norms = graft.index.Norms.taskReader(bcGens.value,
-          bcConf.value)
-        val cursors = bySkey.map { case ((tIdx, _), rows) =>
-          val idf = rows.head._4
-          val bs = rows.map(_._5).sortBy(_.firstDocId).toArray
-          new Cursor(tIdx, idf, bs, avgdl, lo, hi, norms.dl)
-        }.toArray
-        val floor = bcTheta0.value.getOrElse(qid, Double.NegativeInfinity)
-        val mask: Long => Boolean = bcTomb.value.fn
-        val termIdxs = bySkey.keysIterator.map(_._1).toSet
-        val top =
-          if (!isAnd && termIdxs.size == 1) {
-            // the whole task is ONE term (single-term query, possibly
-            // many salted sub-runs): per-posting scores are
-            // independent — impact-ordered block evaluation with
-            // early termination replaces the degenerate WAND merge
-            val rows = bySkey.valuesIterator.flatten.toArray
-            Wand.singleTermTopK(rows.map(_._5), rows.head._4, avgdl,
-              depth, lo, hi, floor, mask, norms.dl)
-          } else if (isAnd) {
-            val order = bcDfOrder.value(qid)
-            // every term group must be present in this range's cursor
-            // set is NOT required: absent group just means no match in
-            // range — but correctness of AND requires knowing the term
-            // exists somewhere; group by termIdx in df order:
-            val groups = order.map(tI => cursors.filter(_.termIdx == tI))
-              .toArray
-            if (groups.exists(_.isEmpty)) Array.empty[(Long, Double)]
-            else Wand.intersectAnd(groups, depth, mask)
-          } else Wand.wandOr(cursors, depth, floor, mask)
-        top.iterator.map { case (d, s) => (qid, d, s) }
-      }
-
-    // 5. final merge per query: k·R rows per query — tiny by
-    // construction, so collect and merge on the driver rather than
-    // paying another shuffle stage (measured ~30% of single-query
-    // latency). This is the reference's serve-path shape too: workers
-    // return partial top-k, the coordinator merges
-    // (/root/reference/packages/api/spheraform_api/routers/search.py:61-64).
-    val merged = partials.collect()
-      .groupBy(_._1)
-      .toSeq
-      .flatMap { case (qid, rows) =>
-        rows.sortBy { case (_, d, s) => (-s, d) }
-          .slice(math.max(0, offset), depth).zipWithIndex
-          .map { case ((_, d, s), i) =>
-            SearchHit(qid, math.max(0, offset) + i + 1, d, s)
-          }
-      }
-    spark.createDataset(merged)
+    val ranges = math.max(1, numRanges)
+    val scattered = view.scatter(uses, verifyPositions = false, ranges) {
+      case (b, (qid, tIdx, idf, residual), r) =>
+        // MaxScore gate BEFORE the shuffle: the block's exact bound
+        // under current stats vs this (query, term)'s residual
+        if (BM25.score(b.maxTf.toLong, b.minDl.toLong, avgdl, idf) < residual)
+          Iterator.empty
+        else Iterator.single((qid, r, tIdx, idf, b))
+    }
+    val gather = Gather(ranges, view.maxDoc, avgdl, depth, off, mode == And,
+      theta0, plans.map(p => p.queryId -> p.terms.map(t => p.termIdx(t.term))).toMap)
+    Some(Prepared(gather, scattered, bcGens, bcConf,
+      spark.sparkContext.broadcast(tombMask)))
   }
 
   /** Engine-backed phrase matching: posting-list AND-intersection plus
@@ -543,13 +612,8 @@ object Searcher {
     import spark.implicits._
     if (slots.isEmpty) return spark.emptyDataset[Long]
     val distinctTerms = slots.distinct
-    // empty generations have no readable terms/segments (their
-    // tombstones still mask — maskFor below runs over the full list)
-    val liveGens = indexDirs.map(d => d -> IndexPaths.readStats(spark, d))
-      .filter(_._2.numDocs > 0)
-    if (liveGens.isEmpty) return spark.emptyDataset[Long]
-    val liveDirs = liveGens.map(_._1)
-    val statsList = liveGens.map(_._2)
+    val view = new View(spark, indexDirs, distinctTerms)
+    if (view.isEmpty) return spark.emptyDataset[Long]
     // Fail fast on an index with NO positional tier anywhere: every
     // candidate would fail the position verify and the caller would
     // get an empty result indistinguishable from "phrase not
@@ -557,77 +621,31 @@ object Searcher {
     // allowed (docs from non-positional gens simply can't
     // phrase-match — documented partial semantics); legacy stats
     // without the flag (None) pass through, unknowable.
-    if (verifyPositions && statsList.nonEmpty &&
-        statsList.forall(_.positions.contains(false)))
+    if (verifyPositions && view.statsList.forall(_.positions.contains(false)))
       throw new IllegalArgumentException(
         "phrase search needs the positional tier, but every " +
           s"generation of ${indexDirs.mkString(",")} was built " +
           "without positions (Config.withPositions) — rebuild with " +
           "positions or use conjunctiveDocs/searchMulti")
-    val maxDoc = statsList.map(_.maxDocId).max + 1
-    // pruned dictionary lookups per generation (cache shared with
-    // the BM25 path)
-    val metaPerIndex: Seq[Map[String, TermMeta]] =
-      lookupMetas(spark, liveDirs, distinctTerms)
     // every phrase term must exist in at least one generation
-    if (distinctTerms.exists(t => metaPerIndex.forall(!_.contains(t))))
-      return spark.emptyDataset[Long]
+    if (view.merged.size < distinctTerms.size) return spark.emptyDataset[Long]
     // re-crawl tombstones mask phrase results too — a replaced
     // version must never surface from ANY evaluator
-    val phMask = graft.index.Tombstones.maskFor(spark, indexDirs)
-    val bcPhTombs = spark.sparkContext.broadcast(phMask)
+    val bcMask = spark.sparkContext.broadcast(
+      Tombstones.maskFor(spark, indexDirs))
     val tIdx: Map[String, Int] = distinctTerms.zipWithIndex.toMap
-    // storage keys → distinct-term index (merged across generations)
-    val keyUses: Map[String, Int] = metaPerIndex.flatMap { metas =>
-      metas.toSeq.flatMap { case (term, tm) =>
-        storageKeys(term, tm).map(_ -> tIdx(term))
-      }
-    }.toMap
-    val bcUses = spark.sparkContext.broadcast(keyUses)
     val ranges = math.max(1, numRanges)
-    val blocks = liveDirs.zip(statsList).map { case (d, st) =>
-      val hs = metaPerIndex(liveDirs.indexOf(d)).toSeq.flatMap {
-        case (term, tm) =>
-          storageKeys(term, tm).map(IndexBuilder.xxhash)
-      }
-      val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets)).distinct
-      IndexPaths.segments(spark, d)
-        .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-    }.reduce(_ union _)
+    val maxDoc = view.maxDoc
     val slotIdxs = slots.map(tIdx).toArray
-    val nDistinct = distinctTerms.size
-    val matched = blocks
-      // the AND-only path never reads positions — blank posEnc before
-      // the scatter shuffle (same reasoning as the BM25 path)
-      .map(b => if (verifyPositions || b.posEnc == null ||
-                    b.posEnc.isEmpty) b
-                else b.copy(posEnc = Array.emptyByteArray))
-      .flatMap { b =>
-      bcUses.value.get(b.skey).iterator.flatMap { ti =>
-        (rangeOf(b.firstDocId, ranges, maxDoc) to
-         rangeOf(b.lastDocId, ranges, maxDoc)).iterator
-          .map(r => (r, ti, b))
-      }
+    view.scatter(distinctTerms.zipWithIndex, verifyPositions, ranges) {
+      (b, ti, r) => Iterator.single((r, ti, b))
     }
       .groupByKey(_._1)
       .flatMapGroups { (r: Int, it: Iterator[(Int, Int, SegmentBlock)]) =>
         val (lo, hi) = rangeWindow(r, ranges, maxDoc)
-        val bySkey = it.toSeq.groupBy(x => (x._2, x._3.skey))
-        val byTerm = Array.fill(nDistinct)(
-          scala.collection.mutable.ArrayBuffer.empty[Cursor])
-        bySkey.foreach { case ((ti, _), rows) =>
-          val bs = rows.map(_._3).sortBy(_.firstDocId).toArray
-          // phrase matching never scores → no norms lookup needed
-          byTerm(ti) += new Cursor(ti, 0.0, bs, 1.0, lo, hi, _ => 1L)
-        }
-        val slotGroups = slotIdxs.map(ti => byTerm(ti).toArray)
-        val m = bcPhTombs.value.fn
-        val hits =
-          (if (verifyPositions) Wand.phraseDocs(slotGroups)
-           else Wand.andDocs(slotGroups)).iterator
-        if (m == null) hits else hits.filterNot(m(_))
+        matchRange(it.map(x => (x._2, x._3)).toSeq, slotIdxs, verifyPositions,
+          lo, hi, bcMask.value.fn)
       }
-    matched
   }
 
   /** Paged phrase search: docIds ascending, rows [offset, offset+limit).
@@ -679,8 +697,7 @@ object Searcher {
     */
   def dictionary(spark: SparkSession, indexDirs: Seq[String]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val live = indexDirs
-      .filter(d => IndexPaths.readStats(spark, d).numDocs > 0)
+    val live = new View(spark, indexDirs, Nil).dirs
     if (live.isEmpty)
       return spark.emptyDataset[(String, Long, Long)]
         .toDF("term", "df", "cf")
@@ -703,17 +720,8 @@ object Searcher {
                 terms: Seq[String]): Map[String, TermMeta] = {
     val distinctTerms = terms.distinct
     if (distinctTerms.isEmpty) return Map.empty
-    val live = indexDirs
-      .filter(d => IndexPaths.readStats(spark, d).numDocs > 0)
-    if (live.isEmpty) return Map.empty
-    val metaPerIndex = lookupMetas(spark, live, distinctTerms)
-    distinctTerms.flatMap { term =>
-      val metas = metaPerIndex.flatMap(_.get(term))
-      if (metas.isEmpty) None
-      else Some(term -> metas.head.copy(df = metas.map(_.df).sum,
-        cf = metas.map(_.cf).sum, maxTf = metas.map(_.maxTf).max,
-        minDl = metas.map(_.minDl).min))
-    }.toMap
+    val view = new View(spark, indexDirs, distinctTerms)
+    if (view.isEmpty) Map.empty else view.merged
   }
 
   /** Posting membership for an explicit term list: (doc_id, term_idx)
@@ -731,62 +739,32 @@ object Searcher {
     val distinctTerms = terms.distinct
     val empty = spark.emptyDataset[(Long, Int)].toDF("doc_id", "term_idx")
     if (distinctTerms.isEmpty) return empty
-    val liveGens = indexDirs.map(d => d -> IndexPaths.readStats(spark, d))
-      .filter(_._2.numDocs > 0)
-    if (liveGens.isEmpty) return empty
-    val liveDirs = liveGens.map(_._1)
-    val statsList = liveGens.map(_._2)
-    val metaPerIndex = lookupMetas(spark, liveDirs, distinctTerms)
-    val mask = graft.index.Tombstones.maskFor(spark, indexDirs)
-    val bcMask = spark.sparkContext.broadcast(mask)
-    val tIdx: Map[String, Int] = distinctTerms.zipWithIndex.toMap
-    val keyUses: Map[String, Int] = metaPerIndex.flatMap { metas =>
-      metas.toSeq.flatMap { case (term, tm) =>
-        storageKeys(term, tm).map(_ -> tIdx(term))
-      }
-    }.toMap
-    if (keyUses.isEmpty) return empty
-    val bcUses = spark.sparkContext.broadcast(keyUses)
-    val blocks = liveDirs.zip(statsList).map { case (d, st) =>
-      val hs = metaPerIndex(liveDirs.indexOf(d)).toSeq.flatMap {
-        case (term, tm) =>
-          storageKeys(term, tm).map(IndexBuilder.xxhash)
-      }
-      val bks = hs.map(h => IndexBuilder.bucketOf(h, st.numBuckets))
-        .distinct
-      IndexPaths.segments(spark, d)
-        .filter($"bucket".isin(bks: _*) && $"termHash".isin(hs: _*))
-    }.reduce(_ union _)
-    blocks.flatMap { b =>
-      bcUses.value.get(b.skey).iterator.flatMap { ti =>
-        val ds = graft.index.Codec.decodeDeltas(b.docIdsEnc, b.n,
-          b.firstDocId)
-        val m = bcMask.value.fn
-        ds.iterator.filter(id => m == null || !m(id)).map(id => (id, ti))
-      }
+    val view = new View(spark, indexDirs, distinctTerms)
+    if (view.isEmpty) return empty
+    val bcMask = spark.sparkContext.broadcast(
+      Tombstones.maskFor(spark, indexDirs))
+    if (view.merged.isEmpty) return empty
+    view.scatter(distinctTerms.zipWithIndex, verifyPositions = false,
+        ranges = 1) { (b, ti, _) =>
+      val m = bcMask.value.fn
+      graft.index.Codec.decodeDeltas(b.docIdsEnc, b.n, b.firstDocId)
+        .iterator.filter(id => m == null || !m(id)).map(id => (id, ti))
     }.toDF("doc_id", "term_idx")
   }
 
-  /** Back-join urls for a (small) hit set — docs table is range-sorted
-    * by docId so the `isin` filter prunes row groups; the join itself
-    * broadcasts the hits.
+  /** Back-join urls for a (small) hit set: one job over every live
+    * generation's docs table, which is range-sorted by docId, so the
+    * `isin` filter prunes row groups.
     */
-  def withUrls(spark: SparkSession, indexDir: String,
-               hits: Dataset[SearchHit]): Dataset[(Long, Int, Long, Double, String)] =
-    withUrlsMulti(spark, Seq(indexDir), hits)
-
   def withUrlsMulti(spark: SparkSession, indexDirs: Seq[String],
                     hits: Dataset[SearchHit]): Dataset[(Long, Int, Long, Double, String)] = {
     import spark.implicits._
     val h = hits.collect()
     val ids = h.map(_.docId).distinct.toSeq
-    val docs = indexDirs
-      .filter(d => IndexPaths.readStats(spark, d).numDocs > 0)
-      .flatMap { d =>
-        IndexPaths.docs(spark, d)
-          .filter($"docId".isin(ids: _*))
-          .select($"docId", $"url").as[(Long, String)].collect()
-      }.toMap
+    val docs = new View(spark, indexDirs, Nil).dirs
+      .map(d => IndexPaths.docs(spark, d).filter($"docId".isin(ids: _*))
+        .select($"docId", $"url").as[(Long, String)])
+      .reduceOption(_ union _).fold(Map.empty[Long, String])(_.collect().toMap)
     spark.createDataset(h.toSeq.map(x =>
       (x.queryId, x.rank, x.docId, x.score, docs.getOrElse(x.docId, ""))))
   }

@@ -17,6 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * An index generation is written by [[graft.index.Generation]] only:
   * a salt key built, or a generation's docs, terms or segments written,
   * anywhere else is a second generation writer drifting from the first.
+  * [[graft.query.Searcher]] serves every entry point through one view:
+  * a second segment scan or live-generation filter there is a second
+  * copy of the serve plumbing drifting from the first.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -74,6 +77,15 @@ class SourceGuardSpec extends AnyFunSuite {
     val artifactWrite = """\.parquet\(s?"[^"]*/(segments|terms|docs)"""".r
     val found = hitsWhere("Generation.scala")(artifactWrite.findFirstIn(_).nonEmpty)
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("Searcher scans segments and filters live generations in one place each") {
+    val searcher = java.nio.file.Paths.get("src/main/scala/graft/query/Searcher.scala")
+    val lines = java.nio.file.Files.readAllLines(searcher).toArray.map(_.toString)
+    Seq("IndexPaths.segments(", "numDocs > 0").foreach { s =>
+      assert(lines.count(_.contains(s)) == 1,
+        lines.filter(_.contains(s)).mkString(s"$s:\n", "\n", ""))
+    }
   }
 
   test("no buffer is sized to a whole norms stride") {

@@ -196,7 +196,7 @@ class IndexSearchSpec extends AnyFunSuite {
     val hits = Searcher.search(spark, indexDir,
       QuerySet.queries().take(5), 10, Searcher.Or, 4)
     val nHits = hits.count()
-    val withU = Searcher.withUrls(spark, indexDir, hits).collect()
+    val withU = Searcher.withUrlsMulti(spark, Seq(indexDir), hits).collect()
     // cardinality makes "every hit" load-bearing: a join that silently
     // dropped unresolved docIds would still be nonEmpty with
     // valid-looking urls

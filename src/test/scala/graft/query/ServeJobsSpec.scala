@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.data.{PageRow, PagesGen}
-import graft.index.{DocIds, Incremental, IndexBuilder, IndexPaths}
+import graft.index.{DocIds, Incremental, IndexBuilder, IndexPaths, Norms}
 
 /** The serve path's Spark job budget. A query over a base and three
   * re-crawl deltas reads the committed index artifacts with their
@@ -71,6 +71,58 @@ class ServeJobsSpec extends AnyFunSuite {
     assert(and == f.texts.collect { case (id, t) if !f.dead(id) &&
       Seq("term000002", "term000005").forall(graft.functions.Tokenize.tokens(t).contains) => id
     }.toSet)
+  }
+
+  test("the url back-join resolves every hit in one job") {
+    val f = fixture(spark)
+    val hits = Searcher.searchMulti(spark, f.dirs, Seq(QuerySpec(0L,
+      "term000003 term000150"), QuerySpec(1L, "term000001 zzdelta2")), 10,
+      numRanges = 4)
+    val urlOf = f.dirs.flatMap(d => IndexPaths.docs(spark, d).collect()
+      .map(m => m.docId -> m.url)).toMap
+    val (withU, jobs) = jobsOf(spark)(
+      Searcher.withUrlsMulti(spark, f.dirs, hits).collect())
+    assert(jobs.size == 1, jobs)
+    assert(withU.nonEmpty && withU.length.toLong == hits.count())
+    assert(withU.forall(x => x._5 == urlOf(x._3)), withU.mkString("\n"))
+  }
+
+  test("gatherRange and the driver merge over collected blocks == searchMulti, with no job") {
+    val f = fixture(spark)
+    // OR multi-term, single term, AND, page 2
+    val classes = Seq(("term000003 term000150", Searcher.Or, 0),
+      ("term000001", Searcher.Or, 0), ("term000010 term000040", Searcher.And, 0),
+      ("term000010 term000040 term000400", Searcher.Or, 10))
+    def ranked(hits: Seq[SearchHit]) =
+      hits.sortBy(_.rank).map(h => (h.rank, h.docId, h.score))
+    // the base alone has no tombstones, so θ₀ is on and the probe is
+    // forced on; the whole chain is tombstoned
+    Seq(f.dirs.take(1) -> false, f.dirs -> true).foreach { case (dirs, tombstoned) =>
+      classes.zipWithIndex.foreach { case ((text, mode, offset), i) =>
+        val q = Seq(QuerySpec(i.toLong, text))
+        val want = ranked(Searcher.searchMulti(spark, dirs, q, 10, mode, 4,
+          probeMinTotalDf = 0L, offset = offset).collect().toSeq)
+        // the dictionary is warm: any job here is the θ₀ probe's, which
+        // the OR multi-term class runs on the base and tombstones stop
+        val (p, probeJobs) = jobsOf(spark)(
+          Searcher.prepare(spark, dirs, q, 10, mode, 4, 0L, offset).get)
+        assert(p.mask.value.isEmpty != tombstoned)
+        if (tombstoned) assert(probeJobs.isEmpty, s"'$text': $probeJobs")
+        else if (i == 0) assert(probeJobs.nonEmpty, s"'$text': no probe")
+        val blocks = p.scattered.collect()
+        val (got, jobs) = jobsOf(spark) {
+          val g = p.gather
+          val norms = new Norms.Reader(p.gens.value, p.conf.value)
+          g.merge((0 until g.ranges).flatMap { r =>
+            g.gatherRange(i.toLong, r, blocks.filter(_._2 == r)
+              .map(x => (x._3, x._4, x._5)).toSeq, norms.dl, p.mask.value.fn)
+              .map { case (d, s) => (i.toLong, d, s) }
+          })
+        }
+        assert(jobs.isEmpty, s"'$text' $mode: $jobs")
+        assert(want.nonEmpty && ranked(got) == want, s"'$text' $mode offset $offset")
+      }
+    }
   }
 
   test("typed segment reads still prune buckets and push termHash") {
