@@ -45,8 +45,7 @@ object EntryIndex {
     Commit.sweep(spark, Root, "stats.json",
       keep = Set(new org.apache.hadoop.fs.Path(idx).getName))
     if (!Commit.touch(spark, s"$idx/stats.json") ||
-        new index.CheckpointStore(spark, idx).list()
-          .count(_.stage == "segments") < 2) {
+        !index.Generation.segmentsCommitted(spark, idx)) {
       import spark.implicits._
       val docs = spark.read.parquet(s"$dir/documents.parquet")
         .select($"doc_id".as("docId"),

@@ -262,30 +262,12 @@ object Streaming {
   }
 
   /** True iff `dir` holds a COMPLETED build: stats sidecar present and
-    * all segments bucket-group checkpoints committed. The expected
-    * group count comes from the `;b=<buckets>;g=<groups>` knobs in the
-    * checkpoint lineage (groups whose bucket range is empty never
-    * commit — mirror IndexBuilder's loop bounds exactly). Checkpoints
-    * without the knobs (foreign layout) fall back to stats-presence.
+    * all its segments bucket-group checkpoints committed
+    * ([[graft.index.Generation.segmentsCommitted]]).
     */
-  private def isCommittedGen(spark: SparkSession, dir: String): Boolean = {
-    if (!graft.index.IndexPaths.exists(spark, s"$dir/stats.json"))
-      return false
-    val segs = new graft.index.CheckpointStore(spark, dir).list()
-      .filter(c => c.stage == "segments" && c.status == "COMPLETE")
-    if (segs.isEmpty) return false
-    def knob(key: String): Option[Int] =
-      s";$key=(\\d+)".r.findFirstMatchIn(segs.head.lineage)
-        .map(_.group(1).toInt)
-    (knob("g"), knob("b")) match {
-      case (Some(g), Some(b)) if g > 0 && b > 0 =>
-        val bpg = math.max(1, math.ceil(b.toDouble / g).toInt)
-        val expected =
-          (0 until g).count(gi => gi * bpg < math.min(b, gi * bpg + bpg))
-        segs.map(_.unit).distinct.size >= expected
-      case _ => true
-    }
-  }
+  private def isCommittedGen(spark: SparkSession, dir: String): Boolean =
+    graft.index.IndexPaths.exists(spark, s"$dir/stats.json") &&
+      graft.index.Generation.segmentsCommitted(spark, dir)
 
   private def genIdOf(dir: String): Long =
     dir.split('/').last.stripPrefix("gen").toLong

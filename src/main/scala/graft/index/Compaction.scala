@@ -81,8 +81,12 @@ object Compaction {
     // lineage = the inputs: a resume must never trust checkpoints from
     // a run over different generations (delta2 silently missing, its
     // tombstones wrongly dropped as in-range)
+    // the winners' docIds lie in the inputs' span: it sets the docs
+    // write's split without a job
+    val spans = liveGens.map(IndexPaths.readStats(spark, _))
     val stats = try Generation.write(outDir, winners, decoded, cfg, buildId,
-        resume, gens.mkString(","), posFlag, stage = false)
+        resume, gens.mkString(","), posFlag, stage = false,
+        docIds = Some((spans.map(_.minDocId).min, spans.map(_.maxDocId).max)))
       finally if (cacheDecoded) decoded.unpersist()
     // carry the newest watermark forward
     gens.flatMap(d => Incremental.readWatermark(spark, d))

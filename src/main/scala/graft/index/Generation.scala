@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import IndexBuilder.{Config, bucketOf, rangePid}
@@ -12,18 +12,27 @@ import IndexBuilder.{Config, bucketOf, rangePid}
   *
   * Shape of the job (the reference's harvest→normalize→index loop,
   * re-expressed as Spark stages — SURVEY.md §3.2):
-  *   front half:  docs, norms and terms written CONCURRENTLY
-  *                ([[graft.Jobs.all]]); global stats ride along as an
-  *                observation on the docs write. Commits stats.json
-  *                and the "stats" checkpoint.
+  *   route:       with `stage` (a build), one pass over the cached
+  *                posting rows counts them and reads their docId span.
+  *                The count sets the number of segment groups,
+  *                min(numGroups, ceil(postings / saltTarget)), at
+  *                least 1: `numGroups` is a ceiling, and a group holds
+  *                at least one salt run ([[groupsFor]]).
+  *   front half:  docs (with norms inside the same job: the docs split
+  *                falls on norms strides) and terms written
+  *                CONCURRENTLY ([[graft.Jobs.all]]); global stats ride
+  *                along as an observation on the docs write. Commits
+  *                stats.json and the "stats" checkpoint.
   *   postings:    with `stage`, the salted posting stream is written
   *                with the front half — encoded in place when there is
   *                one group (fused), else staged as `postings_staged`
-  *                partitioned by bucket. Commits "postings".
+  *                partitioned by bucket. Commits "postings" with the
+  *                posting count, from which a resume re-routes.
   *   segments:    per bucket group: range shuffle on termHash + sort
   *                (the merge-by-term), streaming block encode, segments
   *                partitioned by bucket. One checkpoint per group →
-  *                resume skips completed groups.
+  *                resume skips completed groups. `postings_staged` is
+  *                deleted once every group is COMPLETE.
   *
   * Hot terms are salted *before* the merge shuffle so no single task
   * ever owns a stopword's full posting list (ancestor: the reference's
@@ -35,10 +44,48 @@ import IndexBuilder.{Config, bucketOf, rangePid}
   */
 object Generation {
 
-  /** (docId, dl) per document that has postings — the norms rows, and
-    * the dl a tokenized build joins back onto its documents. */
-  def docLengths(postings: DataFrame): DataFrame =
-    postings.groupBy(col("docId")).agg(first(col("dl")).as("dl"))
+  /** Segment groups of a build of `postings` posting rows: one per salt
+    * run's worth, at least 1 and at most `numGroups` — a group never
+    * holds less than one salt run, so a generation that small is one
+    * fused pass, and `numGroups` is the ceiling a large one reaches. A
+    * pure function of the posting count, which the "postings"
+    * checkpoint records, so a resume routes as the first run did.
+    */
+  def groupsFor(postings: Long, saltTarget: Long, numGroups: Int): Int = {
+    val runs = (postings + math.max(1L, saltTarget) - 1) / math.max(1L, saltTarget)
+    math.max(1L, math.min(numGroups.toLong, runs)).toInt
+  }
+
+  /** (group, lo, hi): each segment group's bucket range [lo, hi), for
+    * the groups that have one. */
+  private def groupRanges(numBuckets: Int, groups: Int): Seq[(Int, Int, Int)] = {
+    val per = math.max(1, math.ceil(numBuckets.toDouble / groups).toInt)
+    (0 until groups).map(g => (g, g * per, math.min(numBuckets, g * per + per)))
+      .filter(r => r._2 < r._3)
+  }
+
+  /** True iff every segment group of the generation at `dir` committed:
+    * as many as the layout knobs in its lineage (`;b=`, `;g=`, `;st=`)
+    * and, for a build, its "postings" checkpoint give ([[groupsFor]]).
+    * Checkpoints without the knobs (a foreign layout) count as
+    * committed once any group is.
+    */
+  def segmentsCommitted(spark: SparkSession, dir: String): Boolean = {
+    val done = new CheckpointStore(spark, dir).list().filter(_.status == "COMPLETE")
+    val segs = done.filter(_.stage == "segments")
+    if (segs.isEmpty) return false
+    def knob(key: String): Option[Long] =
+      s";$key=(\\d+)".r.findFirstMatchIn(segs.head.lineage).map(_.group(1).toLong)
+    (knob("g"), knob("b")) match {
+      case (Some(g), Some(b)) if g > 0 && b > 0 =>
+        val groups = (done.find(_.stage == "postings"), knob("st")) match {
+          case (Some(p), Some(st)) => groupsFor(p.rowCount, st, g.toInt)
+          case _ => g.toInt
+        }
+        segs.map(_.unit).distinct.size >= groupRanges(b.toInt, groups).size
+      case _ => true
+    }
+  }
 
   /** Write the generation at `outDir` and return its stats.
     *
@@ -48,17 +95,26 @@ object Generation {
     *                  (document, term)
     * @param source    the inputs' identity; with the layout knobs it
     *                  forms the lineage every checkpoint records
-    * @param stage     write the salted posting stream with the front
-    *                  half, the posting rows cached for its four
-    *                  concurrent readers (a tokenized build: the rows
-    *                  are costly to recompute and read by no group);
-    *                  otherwise each group re-salts the posting rows
-    *                  against the committed dictionary, cached or not
-    *                  as the caller chose
+    * @param stage     count the posting rows first (caching them for
+    *                  the concurrent writes below; a tokenized build: the
+    *                  rows are costly to recompute and read by no group)
+    *                  and route by that count ([[groupsFor]]): one group
+    *                  is encoded with the front half (fused), more are
+    *                  staged as `postings_staged` and encoded group by
+    *                  group. Otherwise (a compaction) each of
+    *                  `cfg.numGroups` groups re-salts the posting rows
+    *                  against the committed dictionary, cached or not as
+    *                  the caller chose
+    * @param docIds    the docs' docId span [lo, hi], which sets the docs
+    *                  write's split; required without `stage` (a
+    *                  compaction knows it from its inputs' stats), which
+    *                  takes it from the posting count
     */
   def write(outDir: String, docs: Dataset[DocMeta], postings: DataFrame,
             cfg: Config, buildId: String, resume: Boolean, source: String,
-            positions: Option[Boolean], stage: Boolean): IndexStats = {
+            positions: Option[Boolean], stage: Boolean,
+            docIds: Option[(Long, Long)] = None): IndexStats = {
+    require(stage || docIds.isDefined, "an unstaged write needs its docId span")
     val spark = docs.sparkSession
     import spark.implicits._
     val ckpt = new CheckpointStore(spark, outDir)
@@ -82,36 +138,58 @@ object Generation {
     val shufP =
       if (cfg.shufflePartitions > 0) cfg.shufflePartitions
       else spark.sessionState.conf.numShufflePartitions
+
     // ---- front half: docs + norms + terms (+ postings) + stats -------
-    if (!ckpt.isComplete(if (stage) "postings" else "stats", 0)) {
+    // Returns the number of segment groups.
+    def frontHalf(): Int = {
       val t0 = System.currentTimeMillis()
       // segments encoded under an earlier front half are stale
       IndexPaths.delete(spark, s"$outDir/segments")
-      // Fill the cache first: the jobs below run CONCURRENTLY from
-      // driver threads and must not race to compute it.
-      if (stage) {
-        postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        postings.count()
-      }
+      // A build counts its posting rows, which fills their cache first
+      // (the jobs below run CONCURRENTLY from driver threads and must
+      // not race to compute it), and reads its docId span off the same
+      // pass.
+      val (postingCount, (lo, hi)) =
+        if (stage) {
+          postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          val r = postings.agg(count(lit(1)), min($"docId"), max($"docId")).head()
+          (r.getLong(0), if (r.isNullAt(1)) (0L, 0L) else (r.getLong(1), r.getLong(2)))
+        } else (-1L, docIds.get)
+      val groups =
+        if (stage) groupsFor(postingCount, cfg.saltTarget, cfg.numGroups)
+        else cfg.numGroups
+      val fused = stage && groups == 1
+
+      // Docs and norms in one job. An ANALYTIC docId split whose
+      // boundaries fall on norms stride boundaries (docIds are dense, so
+      // the span needs no sampling job — unlike repartitionByRange — and
+      // file boundaries are a pure function of the rows): each task owns
+      // whole, contiguous strides, sorted by docId, and writes their norms
+      // windows from the rows it writes to `docs/`.
+      val s0 = Norms.strideOf(lo)
+      val strides = math.max(1L, Norms.strideOf(hi) - s0 + 1)
+      val docParts = math.max(1L, math.min(shufP / 2, strides)).toInt
+      val docPid = least(greatest(
+        floor((shiftrightunsigned($"docId", Norms.StrideLog) - s0) * docParts / strides),
+        lit(0L)), lit(docParts - 1L)).cast("int")
+      val conf = spark.sparkContext.broadcast(
+        new Norms.SerConf(spark.sparkContext.hadoopConfiguration))
       val obsDocs = new org.apache.spark.sql.Observation()
       val docsJob = () =>
-        docs.repartitionByRange(math.max(1, shufP / 2), $"docId")
-          .sortWithinPartitions("docId")
-          // avgdl from an INTEGER token-count sum — exact and
-          // independent of partition/summation order, unlike avg()
-          // over doubles (the rank-identity contract shares it with
-          // the scalar oracle).
-          .observe(obsDocs, count(lit(1)).as("n"),
-            sum($"dl".cast("long")).as("toks"), max($"docId").as("maxId"),
-            max($"dl".cast("long")).as("maxDl"),
-            min($"docId").as("minId"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
-
-      // Zero-token docs never enter postings, so they take no norms
-      // slot and none is ever read.
-      val normsJob = () =>
-        Norms.write(docLengths(postings).select($"docId", $"dl".cast("int"))
-          .as[(Long, Int)], outDir)
+        graft.Commit.marked(spark, s"$outDir/norms/_complete") {
+          docs.repartitionById(docParts, docPid)
+            .sortWithinPartitions("docId")
+            .mapPartitions(Norms.writeAlong(_, outDir, conf.value))
+            // avgdl from an INTEGER token-count sum — exact and
+            // independent of partition/summation order, unlike avg()
+            // over doubles (the rank-identity contract shares it with
+            // the scalar oracle).
+            .observe(obsDocs, count(lit(1)).as("n"),
+              sum($"dl".cast("long")).as("toks"), max($"docId").as("maxId"),
+              max($"dl".cast("long")).as("maxDl"),
+              min($"docId").as("minId"))
+            .write.mode(SaveMode.Overwrite).parquet(s"$outDir/docs")
+        }(_ => "")
 
       // Per-term df over exactly these postings (a metadata re-sum
       // would overcount once a compaction drops a doc); hot terms
@@ -143,8 +221,6 @@ object Generation {
           .observe(obsTerms, count(lit(1)).as("n"))
           .write.mode(SaveMode.Overwrite).parquet(s"$outDir/terms")
 
-      val fused = stage && cfg.numGroups == 1
-      val obsStaged = new org.apache.spark.sql.Observation()
       val obsBlocks = new org.apache.spark.sql.Observation()
       val postingsJob = () => {
         val staged = salt(postings, termDf, cfg.numBuckets)
@@ -158,23 +234,21 @@ object Generation {
           // build). Trade-off: a crash mid-encode resumes from the
           // posting rows, not from staged postings — for one group
           // that re-runs the same stage either way.
-          writeSegments(encodeSegments(
-              staged.observe(obsStaged, count(lit(1)).as("n")), cfg),
-            obsBlocks, SaveMode.Overwrite, outDir)
+          writeSegments(encodeSegments(staged, cfg), obsBlocks,
+            SaveMode.Overwrite, outDir)
         else
           // Hash-partition the staging write ON BUCKET: each bucket
           // lands wholly in one task (1-2 dirs per task, bounded files)
           // with NO range-sampling pass — the encode stage re-sorts
           // anyway, so a global order here would be wasted work.
           staged.repartition(math.min(shufP, cfg.numBuckets), $"bucket")
-            .observe(obsStaged, count(lit(1)).as("n"))
             .write.mode(SaveMode.Overwrite).partitionBy("bucket")
             .parquet(s"$outDir/postings_staged")
       }
 
       // The writes stand or fall together: a failed one cancels the
       // others, and none still writes into outDir once this rethrows.
-      graft.Jobs.all(spark)(Seq(docsJob, normsJob, termsJob) ++
+      graft.Jobs.all(spark)(Seq(docsJob, termsJob) ++
         (if (stage) Seq(postingsJob) else Nil))
       if (stage) postings.unpersist()
       val n = obsDocs.get("n").asInstanceOf[Long]
@@ -200,9 +274,14 @@ object Generation {
       // fused path never writes.
       if (fused) commit("segments", obsBlocks.get("n").asInstanceOf[Long], "segments")
       if (stage)
-        commit("postings", obsStaged.get("n").asInstanceOf[Long],
-          if (fused) "segments" else "postings_staged")
+        commit("postings", postingCount, if (fused) "segments" else "postings_staged")
+      groups
     }
+    val groups =
+      if (!ckpt.isComplete(if (stage) "postings" else "stats", 0)) frontHalf()
+      else if (stage)
+        groupsFor(ckpt.read("postings", 0).get.rowCount, cfg.saltTarget, cfg.numGroups)
+      else cfg.numGroups
 
     // ---- segments, one checkpoint per bucket group -------------------
     // explicit schema: an empty delta's partitioned write leaves only
@@ -214,12 +293,8 @@ object Generation {
           .schema(org.apache.spark.sql.Encoders.product[StagedPosting].schema)
           .parquet(s"$outDir/postings_staged").as[StagedPosting]
       else salt(postings, IndexPaths.terms(spark, outDir).toDF(), cfg.numBuckets)
-    val bucketsPerGroup =
-      math.max(1, math.ceil(cfg.numBuckets.toDouble / cfg.numGroups).toInt)
-    for (g <- 0 until cfg.numGroups) {
-      val lo = g * bucketsPerGroup
-      val hi = math.min(cfg.numBuckets, lo + bucketsPerGroup)
-      if (lo < hi && !ckpt.isComplete("segments", g)) {
+    groupRanges(cfg.numBuckets, groups).foreach { case (g, lo, hi) =>
+      if (!ckpt.isComplete("segments", g)) {
         val t0 = System.currentTimeMillis()
         // clean any partial output of a previous attempt of THIS group
         (lo until hi).foreach { b =>
@@ -238,6 +313,9 @@ object Generation {
           throw new RuntimeException(s"injected failure after group $g")
       }
     }
+    // every group is committed: the staged postings' only reader was a
+    // resume of this loop
+    if (stage && groups > 1) IndexPaths.delete(spark, s"$outDir/postings_staged")
     IndexPaths.readStats(spark, outDir)
   }
 

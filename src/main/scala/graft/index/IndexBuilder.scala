@@ -20,7 +20,14 @@ object IndexBuilder {
 
   /** @param numBuckets   term-hash-range segment partitions at rest
     * @param blockSize    postings per compressed block
-    * @param numGroups    checkpoint units for the segments stage
+    * @param numGroups    the most checkpoint units (bucket groups) the
+    *                     segments stage splits into. A build routes by
+    *                     its posting count: one group per salt run's
+    *                     worth (ceil(postings / saltTarget)), so a group
+    *                     holds at least one salt run and a build that
+    *                     small is one fused pass
+    *                     ([[Generation.groupsFor]]); a compaction uses
+    *                     all numGroups
     * @param saltTarget   max postings per salted sub-run; terms with
     *                     df > saltTarget are split into
     *                     ceil(df/saltTarget) sub-runs
@@ -174,7 +181,7 @@ object IndexBuilder {
     // count toward N and avgdl), url from a tokenize-free,
     // column-pruned scan of the input
     val docMeta = docs.select($"docId", $"url")
-      .join(Generation.docLengths(tf), Seq("docId"), "left")
+      .join(tf.groupBy($"docId").agg(first($"dl").as("dl")), Seq("docId"), "left")
       .select($"docId", $"url",
         coalesce($"dl", lit(0)).cast("int").as("dl"))
       .as[DocMeta]

@@ -10,11 +10,14 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
   * [[Generation.write]]:
   *
   * {{{
-  *   <dir>/docs/                  DocMeta parquet, range-sorted by docId
-  *   <dir>/norms/                 dl per docId window ([[Norms]])
+  *   <dir>/docs/                  DocMeta parquet, split on norms strides,
+  *                                sorted by docId
+  *   <dir>/norms/                 dl per docId window ([[Norms]]),
+  *                                written by the docs job
   *   <dir>/terms/                 TermMeta parquet, range-sorted by termHash
   *   <dir>/postings_staged/       StagedPosting parquet, partitionBy(bucket)
-  *                                (multi-group builds only)
+  *                                (multi-group builds only, deleted once
+  *                                every group is COMPLETE)
   *   <dir>/segments/              SegmentBlock parquet, partitionBy(bucket),
   *                                sorted by (termHash, skey, blockId)
   *   <dir>/tombstones_strided/    replaced docIds, one sorted-long file

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.functions.{col, shiftrightunsigned}
 
 /** Document-length norms sidecar (SCALE.md: the Lucene-style evolution
   * of storing dl per posting).
@@ -25,6 +26,11 @@ import org.apache.hadoop.fs.Path
   * A gather task touches only the strides its docId window [lo, hi)
   * overlaps — (hi−lo)/2^20 files of at most 4 MB each, bounded by
   * choosing numRanges so windows fit executor memory.
+  *
+  * Who writes it: a generation's docs job ([[Generation.write]]). Its
+  * docId split puts every stride in one task, sorted by docId, so each
+  * task writes its strides' windows ([[WindowWriter]]) from the rows it
+  * is writing anyway, with no shuffle or job of its own.
   */
 object Norms {
 
@@ -168,54 +174,102 @@ object Norms {
     r
   }
 
-  /** Write the norms files for one generation from its (docId, dl)
-    * rows. Distributed: each stride is owned by exactly one task
-    * (groupByKey on strideId), which writes the window [lo, hi] of the
-    * docIds it received — no driver bottleneck, no cross-task file
-    * contention.
+  /** Writes the stride window files of one task's (docId, dl) rows,
+    * which arrive in docId order with each stride's rows all in this
+    * task: a stride's file is written once its last row has passed (a
+    * window of the stride, never a padded stride, in memory at a time).
+    * [[graft.Commit.file]] replaces each file atomically — a retried
+    * twin writes identical bytes, the stride's rows being
+    * deterministic.
+    */
+  final class WindowWriter(dir: String, conf: Configuration) {
+    private var sid = -1L
+    private val offs = Array.newBuilder[Int]
+    private val dls = Array.newBuilder[Int]
+
+    def add(docId: Long, dl: Int): Unit = {
+      val s = strideOf(docId)
+      if (s != sid) {
+        flush()
+        require(s > sid, s"norms rows out of docId order: stride $s after $sid")
+        sid = s
+      }
+      offs += (docId & (Stride - 1)).toInt
+      dls += dl
+    }
+
+    def close(): Unit = flush()
+
+    private def flush(): Unit = {
+      val (o, d) = (offs.result(), dls.result())
+      offs.clear(); dls.clear()
+      if (o.nonEmpty) {
+        val lo = o.min
+        val buf = java.nio.ByteBuffer.allocate(
+          HeaderBytes + 4 * (o.max - lo + 1))
+        buf.putInt(Magic).putInt(lo)
+        var i = 0
+        while (i < o.length) {
+          buf.putInt(HeaderBytes + 4 * (o(i) - lo), d(i))
+          i += 1
+        }
+        val fin = new Path(filePath(dir, sid))
+        graft.Commit.file(fin.getFileSystem(conf), fin)(_.write(buf.array))
+      }
+    }
+  }
+
+  /** A generation's docs rows, passed through unchanged while the
+    * norms windows of those with dl > 0 are written: the documents that
+    * have postings (a zero-token doc takes no norms slot, and none is
+    * ever read). The last window is written when `docs` ends. The rows
+    * come in docId order, each stride's rows all in this task: the
+    * docs job's split ([[Generation.write]]).
+    */
+  def writeAlong(docs: Iterator[DocMeta], dir: String,
+                 conf: SerConf): Iterator[DocMeta] = {
+    val w = new WindowWriter(dir, conf.value)
+    new Iterator[DocMeta] {
+      private var open = true
+      def hasNext: Boolean = docs.hasNext || {
+        if (open) { open = false; w.close() }
+        false
+      }
+      def next(): DocMeta = {
+        val d = docs.next()
+        if (d.dl > 0) w.add(d.docId, d.dl)
+        d
+      }
+    }
+  }
+
+  /** Write the norms files of `dir` from bare (docId, dl) rows, every
+    * row kept (zero dls included): each stride's rows are sent to one
+    * task in docId order, which writes the stride's window. A
+    * generation does not come here: its docs job writes the same files
+    * ([[Generation.write]]).
     *
-    * Commit protocol ([[graft.Commit.marked]]): the `_complete` marker
-    * Reader requires is retracted first and written last, and every
-    * stride replaces its file atomically ([[graft.Commit.file]] — a
-    * retried twin writes identical bytes, the stride's rows being
-    * deterministic). A job that dies mid-write leaves no marker, so
-    * readers fail loudly instead of serving dl=0 from a partial
-    * sidecar, or stale dl from a previous run into a reused dir.
+    * Commit protocol ([[graft.Commit.marked]]), the same as a
+    * generation's: the `_complete` marker Reader requires is retracted
+    * first and written last. A job that dies mid-write leaves no
+    * marker, so readers fail loudly instead of serving dl=0 from a
+    * partial sidecar, or stale dl from a previous run into a reused
+    * dir.
     */
   def write(docDl: org.apache.spark.sql.Dataset[(Long, Int)],
             dir: String): Unit = {
     val spark = docDl.sparkSession
-    import spark.implicits._
     val bc = spark.sparkContext.broadcast(
       new SerConf(spark.sparkContext.hadoopConfiguration))
     val target = dir
     graft.Commit.marked(spark, s"$target/norms/_complete") {
-      docDl.groupByKey(x => strideOf(x._1))
-        .mapGroups { (sid: Long, it: Iterator[(Long, Int)]) =>
-          val offs = Array.newBuilder[Int]
-          val dls = Array.newBuilder[Int]
-          it.foreach { case (docId, dl) =>
-            offs += (docId & (Stride - 1)).toInt
-            dls += dl
-          }
-          val (o, d) = (offs.result(), dls.result())
-          val lo = o.min
-          val buf = java.nio.ByteBuffer.allocate(
-            HeaderBytes + 4 * (o.max - lo + 1))
-          buf.putInt(Magic).putInt(lo)
-          var i = 0
-          while (i < o.length) {
-            buf.putInt(HeaderBytes + 4 * (o(i) - lo), d(i))
-            i += 1
-          }
-          val fin = new Path(filePath(target, sid))
-          graft.Commit.file(fin.getFileSystem(bc.value.value), fin)(
-            _.write(buf.array))
-          sid
+      docDl.repartition(shiftrightunsigned(col("_1"), StrideLog))
+        .sortWithinPartitions("_1")
+        .foreachPartition { (it: Iterator[(Long, Int)]) =>
+          val w = new WindowWriter(target, bc.value.value)
+          it.foreach { case (docId, dl) => w.add(docId, dl) }
+          w.close()
         }
-        // materialize the writes; an RDD count adds no aggregate
-        // shuffle (a Dataset count's costs one more job)
-        .rdd.count()
-    }(_.toString)
+    }(_ => "")
   }
 }

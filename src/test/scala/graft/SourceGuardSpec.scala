@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * An index generation is written by [[graft.index.Generation]] only:
   * a salt key built, or a generation's docs, terms or segments written,
   * anywhere else is a second generation writer drifting from the first.
+  * A docId split in the index package is analytic (docIds are dense):
+  * a range sample outside [[graft.index.DocIds]] (the url rank) is a
+  * job bought for nothing, and norms ride the docs job, so a
+  * `groupByKey` in `Norms.scala` is their old shuffle coming back.
   * [[graft.query.Searcher]] serves every entry point through one view:
   * a second segment scan or live-generation filter there is a second
   * copy of the serve plumbing drifting from the first.
@@ -86,6 +90,21 @@ class SourceGuardSpec extends AnyFunSuite {
       assert(lines.count(_.contains(s)) == 1,
         lines.filter(_.contains(s)).mkString(s"$s:\n", "\n", ""))
     }
+  }
+
+  test("only the docId rank samples a range split in the index package") {
+    // the url rank needs sampling; docIds are dense, so every other
+    // docId split is analytic (Generation's docs write)
+    val found = hitsWhere("DocIds.scala")(_.contains("repartitionByRange("))
+      .filter(_.startsWith("src/main/scala/graft/index/"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("norms are written without a groupByKey") {
+    val norms = java.nio.file.Paths.get("src/main/scala/graft/index/Norms.scala")
+    val found = java.nio.file.Files.readAllLines(norms).toArray
+      .map(_.toString).filter(_.contains("groupByKey"))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
   test("no buffer is sized to a whole norms stride") {

@@ -64,6 +64,7 @@ class ResumeSpec extends AnyFunSuite {
       assert(segmentFingerprint(crashDir) == segmentFingerprint(cleanDir),
         s"resumed after group $g != uninterrupted")
       assertCheckpointsCountSegments(crashDir)
+      assert(!IndexPaths.exists(spark, s"$crashDir/postings_staged"))
     }
 
   test("crash after any group, resume → identical segments") {
@@ -94,11 +95,62 @@ class ResumeSpec extends AnyFunSuite {
     assert(segmentFingerprint(fusedDir) == segmentFingerprint(stagedDir))
     // the fused path must have written no staging parquet at all
     assert(!IndexPaths.exists(spark, s"$fusedDir/postings_staged"))
-    assert(IndexPaths.exists(spark, s"$stagedDir/postings_staged"))
+    // the staged path committed "postings" with the posting count, and
+    // its staging parquet is gone once every group committed
+    val postingRows = IndexPaths.segments(spark, stagedDir)
+      .agg(org.apache.spark.sql.functions.sum("n")).head().getLong(0)
+    assert(new CheckpointStore(spark, stagedDir).read("postings", 0)
+      .map(_.rowCount).contains(postingRows))
+    assert(!IndexPaths.exists(spark, s"$stagedDir/postings_staged"))
     // and both checkpoints exist so resume skips the fused build whole
     val ck = new CheckpointStore(spark, fusedDir)
     assert(ck.isComplete("postings", 0) && ck.isComplete("segments", 0))
     assertCheckpointsCountSegments(fusedDir)
+  }
+
+  test("a build routed to one group resumes at its stats and postings boundaries") {
+    // 300 docs hold far fewer postings than the default salt run, so
+    // numGroups 4 routes to one fused group. No term's df (at most 300)
+    // reaches either salt target, so the staged 4-group build at
+    // saltTarget 400 lays out the same blocks.
+    val docs = DocIds.fromPages(PagesGen.pages(spark, 300L), 6)
+    docs.cache().count()
+    val routed = cfg.copy(saltTarget = IndexBuilder.Config().saltTarget)
+    val stagedDir = SparkTestSession.tmpDir("graft_route_staged")
+    IndexBuilder.build(docs, stagedDir, cfg, "s")
+    assert(new CheckpointStore(spark, stagedDir).list()
+      .count(_.stage == "segments") == cfg.numGroups)
+    def stages(dir: String) =
+      new CheckpointStore(spark, dir).list().map(c => (c.stage, c.unit)).toSet
+    val all = Set(("stats", 0), ("segments", 0), ("postings", 0))
+
+    // a crash after the "stats" commit, and one between the fused
+    // segments and "postings" commits, leave exactly the checkpoints
+    // committed before it (and a torn segments dir)
+    Seq("stats" -> Seq("segments_0", "postings_0"), "segments" -> Seq("postings_0"))
+      .foreach { case (at, lost) =>
+        val dir = SparkTestSession.tmpDir(s"graft_route_crash_$at")
+        IndexBuilder.build(docs, dir, routed, "r")
+        lost.foreach(c => IndexPaths.delete(spark, s"$dir/_checkpoints/$c.json"))
+        IndexPaths.delete(spark, s"$dir/segments/bucket=0")
+        IndexBuilder.build(docs, dir, routed, "r", resume = true)
+        assert(stages(dir) == all, at)
+        assert(!IndexPaths.exists(spark, s"$dir/postings_staged"), at)
+        assert(segmentFingerprint(dir) == segmentFingerprint(stagedDir),
+          s"resumed after $at != the staged build")
+        assertCheckpointsCountSegments(dir)
+      }
+
+    // after the "postings" commit the build is whole: a resume starts
+    // no job at all, let alone an encode
+    val dir = SparkTestSession.tmpDir("graft_route_done")
+    IndexBuilder.build(docs, dir, routed, "r")
+    val (_, jobs) = graft.query.ServeJobsSpec.jobsOf(spark)(
+      IndexBuilder.build(docs, dir, routed, "r", resume = true))
+    assert(jobs.isEmpty, jobs.mkString("\n", "\n", ""))
+    assert(stages(dir) == all)
+    assert(segmentFingerprint(dir) == segmentFingerprint(stagedDir))
+    docs.unpersist()
   }
 
   test("compacting a base alone gives the base's own build back") {
